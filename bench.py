@@ -783,6 +783,14 @@ def main() -> None:
     from tiledb_vector_search_spark import get_spark
 
     spark = get_spark(app_name="tvs-bench")
+    try:
+        _run(spark, sf_dir, sf, load_gate)
+    finally:
+        # a failed row or a failed guard must not leave the JVM running
+        spark.stop()
+
+
+def _run(spark, sf_dir: str, sf: str, load_gate: dict) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM/session AND the Python-UDF worker pool (first pandas-UDF
     # stage pays ~2s of worker spinup; exclude startup from per-query numbers)
@@ -1046,16 +1054,20 @@ def main() -> None:
         "runs_per_query": runs,
         "sf": float(sf),
         "detail": detail_name,
+        # the resolved core count and what Spark made of it, so a scaling
+        # comparison can confirm the setting took effect
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
     }
     if load_gate.get("polluted"):
         record["polluted"] = True
     line = json.dumps(record, separators=(",", ":"))
-    assert len(line) < 1900, (
-        f"one-line record is {len(line)} chars — would outgrow the "
-        "driver's 2000-char tail window; slim it before adding rows"
-    )
+    if len(line) >= 1900:
+        raise SystemExit(
+            f"one-line record is {len(line)} chars — would outgrow the "
+            "driver's 2000-char tail window; slim it before adding rows"
+        )
     print(line)
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -739,6 +739,29 @@ def test_duplicate_spans_planted(spark):
     assert clean[3] == rows[2][1]  # already-normalized text passes through
 
 
+def test_duplicate_spans_spreads_narrow_input(spark):
+    """A one-partition source is hash-spread by doc id BELOW the gram
+    projection, so gram hashing runs on every core; a source already as
+    wide as the cluster is left as it arrives."""
+    from tiledb_vector_search_spark.operators.dedup import duplicate_spans
+
+    rows = [(i, f"shared words here now doc {i} ends") for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    dp = spark.sparkContext.defaultParallelism
+
+    def plan(src):
+        spans = duplicate_spans(src, n=4, min_docs=2, materialize=False)
+        return spans._jdf.queryExecution().executedPlan().toString()
+
+    narrow = plan(df.coalesce(1))
+    gen = narrow.index("Generate explode")
+    spread = "Exchange hashpartitioning(doc_id#"
+    assert spread in narrow[gen:], narrow
+    assert f", {dp}), REPARTITION_BY_NUM" in narrow[gen:], narrow
+    wide = plan(df.repartition(dp))
+    assert spread not in wide[wide.index("Generate explode"):], wide
+
+
 def test_duplicate_spans_merge_and_min_docs(spark):
     """Two shared runs separated by one unique token merge into separate
     spans; raising min_docs above the sharing count empties the result."""

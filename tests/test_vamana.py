@@ -11,11 +11,14 @@ from pyspark.sql import functions as F
 
 from tiledb_vector_search_spark.indexes import VamanaIndex, open_index
 from tiledb_vector_search_spark.ml.vamana import (
-    _greedy_search,
     _robust_prune,
+    _robust_prune_batch,
+    adjacency_from_ids,
     build_vamana_graph,
+    greedy_walks,
     medoid_index,
     search_vamana_graph,
+    sq_dists,
 )
 from tiledb_vector_search_spark.operators.knn import knn_bruteforce_expr
 
@@ -48,7 +51,10 @@ def test_robust_prune_degree_bound():
 def test_robust_prune_properties_hypothesis():
     """Property contract of the vectorized prune across random shapes and
     parameters: subset of candidates, no self, degree-bounded, nearest
-    kept, dmat and on-the-fly forms agree."""
+    kept, dmat and on-the-fly forms agree — and the lockstep batch prune
+    is bit-identical to it per point (same kept ids, same order) over
+    ragged candidate lists that contain the point itself and exact
+    distance ties (integer coordinates)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -58,11 +64,14 @@ def test_robust_prune_properties_hypothesis():
         dims=st.integers(1, 8),
         r_max=st.integers(1, 16),
         alpha=st.floats(1.0, 2.0),
+        ties=st.booleans(),
         seed=st.integers(0, 1000),
     )
-    def check(n, dims, r_max, alpha, seed):
+    def check(n, dims, r_max, alpha, ties, seed):
         rng = np.random.default_rng(seed)
         x = rng.standard_normal((n, dims))
+        if ties:
+            x = np.round(x)
         cand = np.arange(n)
         out = _robust_prune(x, 0, cand, alpha=alpha, r_max=r_max)
         assert len(out) <= r_max
@@ -70,14 +79,88 @@ def test_robust_prune_properties_hypothesis():
         assert set(out.tolist()) <= set(cand.tolist())
         d = np.sum((x - x[0]) ** 2, axis=1)
         d[0] = np.inf
-        assert int(np.argmin(d)) in out
+        assert d[out[0]] == d.min()
         # precomputed-matrix form selects the same neighbors
         sq = np.einsum("ij,ij->i", x, x)
         dmat = np.maximum(sq[:, None] + sq[None, :] - 2.0 * (x @ x.T), 0.0)
         out2 = _robust_prune(x, 0, cand, alpha=alpha, r_max=r_max, dmat=dmat)
         assert out.tolist() == out2.tolist()
+        points = rng.integers(0, n, 6)
+        cands = [rng.permutation(n)[: rng.integers(0, n + 1)] for _ in points]
+        got = _robust_prune_batch(x, points, cands, alpha, r_max, dmat=dmat)
+        for p, c, g in zip(points, cands, got):
+            want = _robust_prune(x, int(p), c, alpha, r_max, dmat=dmat)
+            assert want.tolist() == g.tolist()
 
     check()
+
+
+def _reference_walk(adj, entry, dq, l_size):
+    """One query's best-first walk, one expansion at a time over a beam
+    kept in insertion order (reference ``greedy_search``): the twin the
+    lockstep kernel must equal row for row."""
+    beam = [(int(entry), float(dq[entry]))]
+    in_beam, expanded = {int(entry)}, set()
+    visited = []
+    while True:
+        open_ = [i for i, (v, _) in enumerate(beam) if v not in expanded]
+        if not open_:
+            break
+        # first minimum in beam order
+        b = min(open_, key=lambda i: beam[i][1])
+        v, d = beam[b]
+        expanded.add(v)
+        visited.append((v, d))
+        for u in adj[v]:
+            if int(u) not in in_beam:
+                in_beam.add(int(u))
+                beam.append((int(u), float(dq[u])))
+        if len(beam) > l_size:
+            # keep the best l_size in original beam order (stable ties)
+            keep = sorted(
+                sorted(range(len(beam)), key=lambda i: beam[i][1])[:l_size]
+            )
+            for i in set(range(len(beam))) - set(keep):
+                in_beam.discard(beam[i][0])
+            beam = [beam[i] for i in keep]
+    visited.sort(key=lambda t: t[1])  # stable: ties keep expansion order
+    return [v for v, _ in visited], [d for _, d in visited]
+
+
+@pytest.mark.parametrize(
+    "n,dims,l_size,ties,seed",
+    [
+        (120, 4, 8, False, 0),
+        (200, 3, 12, True, 1),  # integer grid: many exact distance ties
+        (60, 2, 4, True, 2),  # narrow beam: vertices trimmed, then re-added
+        (300, 8, 32, False, 3),
+    ],
+)
+def test_lockstep_walk_matches_single_walk(n, dims, l_size, ties, seed):
+    """Every row of one lockstep call equals that query's own walk: same
+    expansion set, same (distance, expansion-order) sort, same dists —
+    on random graphs (not built ones, so dead ends and one-way edges
+    occur) with exact distance ties and beams narrow enough to trim and
+    later re-add vertices."""
+    rng = np.random.default_rng(seed)
+    x = rng.standard_normal((n, dims))
+    q = rng.standard_normal((40, dims))
+    if ties:
+        x, q = np.round(x), np.round(q)
+    adj = [
+        rng.choice(n, size=int(rng.integers(0, 9)), replace=False)
+        for _ in range(n)
+    ]
+    adj = [a[a != i] for i, a in enumerate(adj)]
+    pad, deg = adjacency_from_ids(np.arange(len(adj)), adj)
+    dq = sq_dists(q, x, np.einsum("ij,ij->i", x, x))
+    vi, vd = greedy_walks(pad, deg, 5, dq, l_size)
+    for r in range(len(q)):
+        want_i, want_d = _reference_walk(adj, 5, dq[r], l_size)
+        m = vi[r] >= 0
+        assert vi[r][m].tolist() == want_i
+        assert vd[r][m].tolist() == want_d
+        assert not np.isfinite(vd[r][~m]).any()
 
 
 def test_graph_build_and_exact_search():
@@ -88,19 +171,32 @@ def test_graph_build_and_exact_search():
     assert all(len(a) <= 16 for a in adj)
     assert all(i not in a for i, a in enumerate(adj))
     # graph search finds the true nearest neighbors for in-corpus queries
-    hits = 0
-    for qi in range(20):
-        vi, vd = search_vamana_graph(x, adj, med, x[qi], 1, l_search=48)
-        hits += int(vi[0] == qi)
+    pad, deg = adjacency_from_ids(np.arange(len(adj)), adj)
+    vi, vd = search_vamana_graph(x, pad, deg, med, x[:20], 1, l_search=48)
+    hits = int((vi[:, 0] == np.arange(20)).sum())
     assert hits >= 19  # self is distance 0; a miss would mean a broken graph
+
+
+def test_graph_build_is_deterministic():
+    """Same shard and seed, same graph: the batch insertion order and every
+    tie-break are fixed, so two builds agree edge for edge."""
+    rng = np.random.default_rng(4)
+    x = rng.standard_normal((400, 8))
+    a1, m1 = build_vamana_graph(x, r_max=12, l_build=24, seed=7)
+    a2, m2 = build_vamana_graph(x, r_max=12, l_build=24, seed=7)
+    assert m1 == m2
+    assert all(u.tolist() == v.tolist() for u, v in zip(a1, a2))
 
 
 def test_greedy_search_visits_sorted():
     rng = np.random.default_rng(3)
     x = rng.standard_normal((50, 4))
     adj, med = build_vamana_graph(x, r_max=8, l_build=16)
-    vi, vd = _greedy_search(x, adj, med, x[7], 16)
-    assert list(vd) == sorted(vd)
+    pad, deg = adjacency_from_ids(np.arange(len(adj)), adj)
+    dq = sq_dists(x[7:8], x, np.einsum("ij,ij->i", x, x))
+    vi, vd = greedy_walks(pad, deg, med, dq, 16)
+    assert list(vd[0]) == sorted(vd[0])
+    assert vi[0, 0] == 7
 
 
 # --- index e2e ----------------------------------------------------------------

@@ -29,6 +29,7 @@ from tiledb_vector_search_spark.functions.distance import (
 )
 from tiledb_vector_search_spark.schemas import (
     ID_COL,
+    PARTITION_COL,
     VECTOR_COL,
     integral_id_col,
 )
@@ -1189,6 +1190,25 @@ class Index:
     @staticmethod
     def delete_index(spark: SparkSession, uri: str) -> None:
         IndexStorage(spark, uri).delete_index()
+
+
+def cell_write_layout(df: DataFrame) -> DataFrame:
+    """Lay out a cell-partitioned snapshot for ``partitionBy(partition_id)``.
+
+    The hash exchange on ``partition_id`` sends every cell to exactly one
+    write task, so each cell directory gets exactly one file (without it
+    every task writes into every directory — quadratic small files at
+    scale); it is the reference's ``consolidate_partition_udf`` (SURVEY
+    §2.9).  The partition count is EXPLICIT: a bare
+    ``repartition(partition_id)`` lets AQE coalesce a small snapshot into
+    ONE writer, so all cells were written by a single task.  A count of
+    ``defaultParallelism`` spreads the cells over every core, and AQE does
+    not coalesce a numbered repartition.  Rows sort by (cell, id), which
+    already satisfies the writer's per-cell ordering, so the write plans
+    no second sort."""
+    return df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, PARTITION_COL
+    ).sortWithinPartitions(PARTITION_COL, ID_COL)
 
 
 def count_and_dims(

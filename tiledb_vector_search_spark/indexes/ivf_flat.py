@@ -30,7 +30,11 @@ from tiledb_vector_search_spark.functions.distance import (
     distance_expr,
     normalize_expr,
 )
-from tiledb_vector_search_spark.indexes.base import Index, count_and_dims
+from tiledb_vector_search_spark.indexes.base import (
+    Index,
+    cell_write_layout,
+    count_and_dims,
+)
 from tiledb_vector_search_spark.ml.kmeans import (
     assign_partitions_expr,
     default_partitions,
@@ -341,16 +345,10 @@ class IVFFlatIndex(Index):
         extra_meta: dict | None = None,
     ) -> None:
         spark = storage.spark
-        # shuffle on partition_id before partitionBy: without it every write
-        # task emits a file into every partition directory (quadratic small
-        # files at scale) — this exchange IS the reference's
-        # consolidate_partition_udf (SURVEY §2.9); AQE coalesces the output.
         # __second/__margin are overlay-selection intermediates, not index
         # state — the snapshot schema is unchanged by with_margins ingest
         storage.write_base(
-            assigned.drop("__second", "__margin")
-            .repartition(PARTITION_COL)
-            .sortWithinPartitions(ID_COL),
+            cell_write_layout(assigned.drop("__second", "__margin")),
             ts,
             partition_by=PARTITION_COL,
             base_size=base_size,

@@ -41,7 +41,11 @@ from tiledb_vector_search_spark.functions.distance import (
     DistanceMetric,
     distance_expr,
 )
-from tiledb_vector_search_spark.indexes.base import Index, count_and_dims
+from tiledb_vector_search_spark.indexes.base import (
+    Index,
+    cell_write_layout,
+    count_and_dims,
+)
 from tiledb_vector_search_spark.ml.kmeans import (
     CENTRALIZED_K_MAX,
     CENTRALIZED_SAMPLE_MAX,
@@ -755,14 +759,10 @@ class IVFPQIndex(Index):
         extra_meta: dict | None = None,
     ) -> None:
         spark = storage.spark
-        # shuffle on partition_id before partitionBy (see IVFFlatIndex note:
-        # avoids the every-task-writes-every-directory small-files blowup).
         # __second/__margin are overlay-selection intermediates, not index
         # state — the snapshot schema is unchanged by with_margins ingest
         storage.write_base(
-            encoded.drop("__second", "__margin")
-            .repartition(PARTITION_COL)
-            .sortWithinPartitions(ID_COL),
+            cell_write_layout(encoded.drop("__second", "__margin")),
             ts,
             partition_by=PARTITION_COL,
             base_size=base_size,

@@ -6,8 +6,9 @@ The reference builds ONE sequential graph in C++; graph construction is
 fundamentally not DataFrame-shaped (SURVEY §7).  The Spark-idiomatic design
 — consistent with DiskANN's own sharded/distributed variant — shards vectors
 by k-means partition and builds an independent Vamana graph per shard inside
-``applyInPandas`` (a group arrives as ONE pandas frame, so the sequential
-build sees its whole shard).  Queries route to nprobe shards, walk each
+``applyInPandas`` (a group arrives as ONE pandas frame, so the build sees
+its whole shard; inside the task it inserts vertices in lockstep batches,
+``ml.vamana.build_vamana_graph``).  Queries route to nprobe shards, walk each
 shard's graph locally, and merge with a window top-k.  Exact single-graph
 parity is out of scope; recall ≥ 0.85 is the parity measure, matching how
 the reference's own tests judge it (``test_ingestion.py:23``).
@@ -43,9 +44,12 @@ from tiledb_vector_search_spark.ml.vamana import (
     DEFAULT_ALPHA,
     DEFAULT_L_BUILD,
     DEFAULT_R_MAX,
+    adjacency_from_ids,
     build_vamana_graph,
     medoid_index,
+    medoid_position,
     search_vamana_graph,
+    sq_dists,
 )
 from tiledb_vector_search_spark.operators.knn import knn_bruteforce_expr
 from tiledb_vector_search_spark.operators.routing import route_queries
@@ -89,6 +93,43 @@ from tiledb_vector_search_spark.indexes.overlay import (  # noqa: E402
     select_overlay_ids,
     waterfill_quotas as _waterfill_quotas,
 )
+
+
+def _walk_shard(
+    pid: int,
+    ids: np.ndarray,
+    x: np.ndarray,
+    neighbors,
+    med_id: int | None,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    eff_k: int,
+    l_search: int,
+) -> pd.DataFrame:
+    """(query_id, id, squared distance) rows of one shard's walk for every
+    query routed to it — the per-group body of both query strategies.
+
+    The overlay pseudo-shard is capped (≤ overlay_max rows), so an EXACT
+    scan beats a graph walk there: one BLAS product for the whole batch,
+    zero walk recall loss.  A graph shard walks all of its queries in one
+    lockstep call (``ml.vamana.search_vamana_graph``)."""
+    if pid == OVERLAY_PID:
+        d = sq_dists(qmat, x, np.einsum("ij,ij->i", x, x))
+        take = min(eff_k, len(ids))
+        pos = np.argpartition(d, take - 1, axis=1)[:, :take]
+        dist = np.take_along_axis(d, pos, axis=1)
+    else:
+        adj, deg = adjacency_from_ids(ids, neighbors)
+        med = medoid_position(ids, med_id)
+        pos, dist = search_vamana_graph(x, adj, deg, med, qmat, eff_k, l_search)
+    hit = pos >= 0
+    return pd.DataFrame(
+        {
+            QUERY_ID_COL: np.broadcast_to(qids[:, None], pos.shape)[hit],
+            ID_COL: ids[pos[hit]],
+            DISTANCE_COL: dist[hit],
+        }
+    )
 
 
 class VamanaIndex(Index):
@@ -457,7 +498,7 @@ class VamanaIndex(Index):
         vector_dtype: str = "float32",
     ) -> tuple[DataFrame, DataFrame]:
         """Per-shard graph build: groupBy(partition).applyInPandas so each
-        sequential build sees its whole shard in one task."""
+        build sees its whole shard in one task."""
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
             from tiledb_vector_search_spark.functions.dtypes import decode_matrix
@@ -513,8 +554,8 @@ class VamanaIndex(Index):
         shard level, same contract as IVF_FLAT — over-cap shards split
         into sub-shards, cold shard centroids survive byte-identical.
         On a graph index the hot shard is worse than a hot probe: the
-        per-shard Vamana build is SEQUENTIAL Python inside one
-        ``applyInPandas`` task (O(n·l·d) per shard), so a 10×-grown
+        per-shard Vamana build runs inside one ``applyInPandas``
+        task (O(n·l·d) per shard), so a 10×-grown
         shard is a 10× straggler on every consolidation.  Splitting
         caps the longest build task.  Every fold already rebuilds each
         shard's graph from its membership (deterministically — sorted
@@ -914,54 +955,17 @@ class VamanaIndex(Index):
                 return pd.DataFrame(
                     {QUERY_ID_COL: [], ID_COL: [], DISTANCE_COL: []}
                 )
-            ids = pdf[ID_COL].to_numpy(dtype=np.int64)
-            x = _decode(pdf[VECTOR_COL], vdtype)
             # over-walk enough to survive the post-walk tombstone anti-join
-            eff_k = kk + tombs_l.get(pid, 0)
-            out_q, out_i, out_d = [], [], []
-            if pid == OVERLAY_PID:
-                # the bridge set is capped (≤ overlay_max rows), so an
-                # EXACT vectorized scan beats a graph walk: one BLAS
-                # product for the whole batch, zero walk recall loss
-                qm = qmat_l[[qpos_l[qid] for qid in routed]]
-                d = (
-                    np.sum(x * x, axis=1)[None, :]
-                    - 2.0 * (qm @ x.T)
-                    + np.sum(qm * qm, axis=1)[:, None]
-                )
-                # clamp: the BLAS identity can emit ~-1e-16 for exact
-                # matches; F.sqrt(negative) is NaN under L2, and NaN
-                # sorts LAST — the true nearest neighbor would vanish
-                np.maximum(d, 0.0, out=d)
-                take = min(eff_k, len(ids))
-                for r, qid in enumerate(routed):
-                    top = np.argpartition(d[r], take - 1)[:take]
-                    top = top[np.lexsort((ids[top], d[r][top]))]
-                    for p in top:
-                        out_q.append(qid)
-                        out_i.append(int(ids[p]))
-                        out_d.append(float(d[r][p]))
-                return pd.DataFrame(
-                    {QUERY_ID_COL: out_q, ID_COL: out_i, DISTANCE_COL: out_d}
-                )
-            pos = {int(e): i for i, e in enumerate(ids)}
-            adj = [
-                np.array(
-                    [pos[n] for n in nbrs if n in pos], dtype=np.int64
-                )
-                for nbrs in pdf["neighbors"]
-            ]
-            med_id = meds.get(pid)
-            med = pos.get(med_id, 0) if med_id is not None else 0
-            for qid in routed:
-                qv = qmat_l[qpos_l[qid]]
-                vi, vd = search_vamana_graph(x, adj, med, qv, eff_k, ls)
-                for p, dv in zip(vi, vd):
-                    out_q.append(qid)
-                    out_i.append(int(ids[p]))
-                    out_d.append(float(dv))
-            return pd.DataFrame(
-                {QUERY_ID_COL: out_q, ID_COL: out_i, DISTANCE_COL: out_d}
+            return _walk_shard(
+                pid,
+                pdf[ID_COL].to_numpy(dtype=np.int64),
+                _decode(pdf[VECTOR_COL], vdtype),
+                pdf["neighbors"],
+                meds.get(pid),
+                np.asarray(routed, dtype=np.int64),
+                qmat_l[[qpos_l[qid] for qid in routed]],
+                kk + tombs_l.get(pid, 0),
+                ls,
             )
 
         schema = f"{QUERY_ID_COL} long, {ID_COL} long, {DISTANCE_COL} double"
@@ -1068,49 +1072,18 @@ class VamanaIndex(Index):
             if len(graph_pdf) == 0 or len(q_pdf) == 0:
                 return empty
             pid = int(graph_pdf[PARTITION_COL].iloc[0])
-            ids = graph_pdf[ID_COL].to_numpy(dtype=np.int64)
-            x = _decode(graph_pdf[VECTOR_COL], vdtype)
-            eff_k = kk + tombs_l.get(pid, 0)
-            out_q, out_i, out_d = [], [], []
-            if pid == OVERLAY_PID:
-                # exact vectorized scan of the capped bridge set (see the
-                # kernel path for rationale)
-                qm = np.array(
+            return _walk_shard(
+                pid,
+                graph_pdf[ID_COL].to_numpy(dtype=np.int64),
+                _decode(graph_pdf[VECTOR_COL], vdtype),
+                graph_pdf["neighbors"],
+                meds.get(pid),
+                q_pdf[QUERY_ID_COL].to_numpy(dtype=np.int64),
+                np.array(
                     [np.asarray(v, dtype=np.float64) for v in q_pdf["__qvec"]]
-                )
-                d = (
-                    np.sum(x * x, axis=1)[None, :]
-                    - 2.0 * (qm @ x.T)
-                    + np.sum(qm * qm, axis=1)[:, None]
-                )
-                np.maximum(d, 0.0, out=d)  # see kernel path: NaN guard
-                take = min(eff_k, len(ids))
-                for r, qid in enumerate(q_pdf[QUERY_ID_COL]):
-                    top = np.argpartition(d[r], take - 1)[:take]
-                    top = top[np.lexsort((ids[top], d[r][top]))]
-                    for p in top:
-                        out_q.append(int(qid))
-                        out_i.append(int(ids[p]))
-                        out_d.append(float(d[r][p]))
-                return pd.DataFrame(
-                    {QUERY_ID_COL: out_q, ID_COL: out_i, DISTANCE_COL: out_d}
-                )
-            pos = {int(e): i for i, e in enumerate(ids)}
-            adj = [
-                np.array([pos[n] for n in nbrs if n in pos], dtype=np.int64)
-                for nbrs in graph_pdf["neighbors"]
-            ]
-            med_id = meds.get(pid)
-            med = pos.get(med_id, 0) if med_id is not None else 0
-            for qid, qv in zip(q_pdf[QUERY_ID_COL], q_pdf["__qvec"]):
-                qvec = np.asarray(qv, dtype=np.float64)
-                vi, vd = search_vamana_graph(x, adj, med, qvec, eff_k, ls)
-                for p, dv in zip(vi, vd):
-                    out_q.append(int(qid))
-                    out_i.append(int(ids[p]))
-                    out_d.append(float(dv))
-            return pd.DataFrame(
-                {QUERY_ID_COL: out_q, ID_COL: out_i, DISTANCE_COL: out_d}
+                ),
+                kk + tombs_l.get(pid, 0),
+                ls,
             )
 
         schema = f"{QUERY_ID_COL} long, {ID_COL} long, {DISTANCE_COL} double"

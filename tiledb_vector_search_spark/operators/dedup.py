@@ -1090,6 +1090,13 @@ def duplicate_spans(
     toks = docs.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("__t")
     )
+    # spread a source narrower than the cluster (the one-file fixture) so
+    # the gram projection below — the pipeline's dominant CPU — runs on
+    # every core; the exchange also pins the token regex to one evaluation
+    # per row (``_shingle_docs``).  A wide input skips it.
+    target = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < target:
+        toks = toks.repartition(target, "doc_id")
     idx = F.when(
         F.size("__t") >= n, F.sequence(F.lit(1), F.size("__t") - (n - 1))
     ).otherwise(F.array().cast("array<int>"))

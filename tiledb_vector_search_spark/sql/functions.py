@@ -122,8 +122,12 @@ SQL_BODY_OVERRIDES: dict[str, str] = {
     ),
     "repetition_top_2gram_frac": (
         f"CASE WHEN (size({_G2}) > 0) THEN "
-        f"round(CAST(array_max(transform(array_distinct({_G2}), "
-        f"g -> size(filter({_G2}, x -> x = g)))) / size({_G2}) AS DOUBLE), 6) "
+        f"round(CAST(aggregate(sort_array({_G2}), "
+        f"named_struct('p', CAST(NULL AS STRING), 'r', 0, 'b', 0), "
+        f"(acc, x) -> named_struct('p', x, "
+        f"'r', IF(acc.p = x, acc.r + 1, 1), "
+        f"'b', greatest(acc.b, IF(acc.p = x, acc.r + 1, 1))), "
+        f"acc -> acc.b) / size({_G2}) AS DOUBLE), 6) "
         f"ELSE CAST(0.0 AS DOUBLE) END"
     ),
     "repetition_dup_3gram_frac": (

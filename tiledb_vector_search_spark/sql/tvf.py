@@ -873,7 +873,11 @@ def _search_vamana_files(
     tombstones are dropped from the walk RESULTS, and additions are
     brute-force-scored into the merge.
     """
-    from tiledb_vector_search_spark.ml.vamana import search_vamana_graph
+    from tiledb_vector_search_spark.ml.vamana import (
+        adjacency_from_ids,
+        medoid_position,
+        search_vamana_graph,
+    )
 
     if metric == "cosine":
         # stored vectors are pre-normalized (normalize_on_write); mirror
@@ -930,21 +934,18 @@ def _search_vamana_files(
                     if int(ids[p]) not in tomb_set
                 )
             return
-        pos = {int(e): i for i, e in enumerate(ids)}
-        adj = [
-            np.array([pos[n] for n in nbrs if n in pos], dtype=np.int64)
-            for nbrs in tb.column("neighbors").to_pylist()
-        ]
-        med_id = medoids.get(pid)
-        med = pos.get(med_id, 0) if med_id is not None else 0
-        for qi in qlist:
-            vi, vd = search_vamana_graph(
-                x, adj, med, qmat[qi], eff_k, l_search
-            )
+        adj, deg = adjacency_from_ids(
+            ids, tb.column("neighbors").to_numpy(zero_copy_only=False)
+        )
+        vi, vd = search_vamana_graph(
+            x, adj, deg, medoid_position(ids, medoids.get(pid)),
+            qmat[qlist], eff_k, l_search,
+        )
+        for qi, row_i, row_d in zip(qlist, vi, vd):
             out[qi].extend(
                 (float(d), int(ids[p]))
-                for p, d in zip(vi, vd)
-                if int(ids[p]) not in tomb_set
+                for p, d in zip(row_i, row_d)
+                if p >= 0 and int(ids[p]) not in tomb_set
             )
 
     for pid, qlist in sorted(part_queries.items()):

@@ -15,8 +15,11 @@ from tiledb_vector_search_spark.functions.distance import DistanceMetric
 from tiledb_vector_search_spark.ml.kmeans import kmeans_numpy
 from tiledb_vector_search_spark.operators.knn import (
     _kernel_distances,
+    block_topk,
+    paired_sum_of_squares,
     partial_topk_idx,
 )
+from tiledb_vector_search_spark.operators.topk import topk_merge
 
 finite = st.floats(-100, 100, allow_nan=False, width=32)
 
@@ -107,3 +110,80 @@ def test_kmeans_numpy_invariants(data):
         # centroids live in the data's bounding box
         assert (c >= x.min(axis=0) - 1e-9).all()
         assert (c <= x.max(axis=0) + 1e-9).all()
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.data())
+def test_block_topk_matches_lexsort_reference(data):
+    """block_topk keeps, per query, the k best (distance, id) pairs of the
+    kernel distance matrix — best = smallest, largest for inner product —
+    for every metric, with ties forced by duplicated vectors."""
+    metric = data.draw(st.sampled_from(list(DistanceMetric)))
+    nq = data.draw(st.integers(1, 4))
+    d = data.draw(st.integers(1, 4))
+    # few distinct coordinates + repeated rows → many exactly tied distances
+    coords = st.sampled_from([-1.0, 0.0, 1.0, 2.0])
+    q = data.draw(arrays(np.float64, (nq, d), elements=coords))
+    n_uniq = data.draw(st.integers(1, 5))
+    uniq = data.draw(arrays(np.float64, (n_uniq, d), elements=coords))
+    pick = st.lists(st.integers(0, n_uniq - 1), min_size=1, max_size=12)
+    x = uniq[data.draw(pick)]
+    ids = np.array(
+        data.draw(st.permutations(range(100, 100 + len(x)))), dtype=np.int64
+    )
+    k = data.draw(st.integers(1, len(x) + 2))
+    rows, got_i, got_d = block_topk(q, x, ids, k, metric)
+    dm = _kernel_distances(q, x, metric)
+    key = -dm if metric is DistanceMetric.INNER_PRODUCT else dm
+    for r in range(nq):
+        want = np.lexsort((ids, key[r]))[: min(k, len(x))]
+        sel = rows == r
+        assert sorted(zip(got_i[sel].tolist(), got_d[sel].tolist())) == sorted(
+            zip(ids[want].tolist(), dm[r][want].tolist())
+        )
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.data())
+def test_topk_merge_matches_dict_min_reference(data):
+    """The TVF's array merge equals a per-query dict-min over (query, id)
+    followed by sorted() and the first k — duplicate (query, id) pairs
+    with different distances included."""
+    n = data.draw(st.integers(0, 30))
+
+    def column(elements, dtype):
+        values = st.lists(elements, min_size=n, max_size=n)
+        return np.array(data.draw(values), dtype=dtype)
+
+    rows = column(st.integers(0, 3), np.int64)
+    ids = column(st.integers(0, 6), np.int64)
+    dists = column(st.sampled_from([0.0, 0.5, 1.0, 1.5]), np.float64)
+    k = data.draw(st.integers(1, 5))
+    ascending = data.draw(st.booleans())
+    merged = topk_merge(rows, ids, dists, k, ascending)
+    got = list(zip(*(a.tolist() for a in merged)))
+    sign = 1.0 if ascending else -1.0
+    want = []
+    for r in sorted(set(rows.tolist())):
+        best: dict[int, float] = {}
+        for rr, i, dv in zip(rows.tolist(), ids.tolist(), dists.tolist()):
+            if rr == r and (i not in best or sign * dv < sign * best[i]):
+                best[i] = dv
+        ranked = sorted(best.items(), key=lambda e: (sign * e[1], e[0]))[:k]
+        want += [(r, i, dv, rank) for rank, (i, dv) in enumerate(ranked, 1)]
+    assert got == want
+
+
+@settings(max_examples=60, deadline=None)
+@given(qx())
+def test_paired_sum_of_squares_is_a_left_fold(pair):
+    """The numpy re-rank distance equals distance_expr's left-to-right
+    aggregate() fold exactly, not just to a tolerance."""
+    q, x = pair
+    n = min(len(q), len(x))
+    got = paired_sum_of_squares(q[:n], x[:n])
+    for a, b, g in zip(q[:n], x[:n], got):
+        acc = 0.0
+        for ai, bi in zip(a.tolist(), b.tolist()):
+            acc = acc + (ai - bi) * (ai - bi)
+        assert g == acc

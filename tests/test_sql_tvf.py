@@ -2,11 +2,20 @@
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tiledb_vector_search_spark.indexes import FlatIndex, IVFFlatIndex, IVFPQIndex
+from tiledb_vector_search_spark.indexes import (
+    FlatIndex,
+    IVFFlatIndex,
+    IVFPQIndex,
+    open_index,
+)
 from tiledb_vector_search_spark.sql import register_ann_search
 
 
@@ -844,4 +853,51 @@ def test_tvf_vamana_recall_target_applies_l_search(
             q, 5, recall_target=0.9, strategy="kernel"
         ).collect()
     }
+    assert got == want
+
+
+GOLDEN_02 = os.path.join(os.path.dirname(__file__), "golden", "spark-0.2")
+
+
+@pytest.mark.parametrize(
+    "name,nprobe,k_factor",
+    [("ivf_pq", 2, 1.0), ("ivf_pq", 2, 4.0), ("vamana", 1, None)],
+)
+def test_tvf_golden_v02_matches_kernel(
+    spark, tmp_path, name, nprobe, k_factor
+):
+    """The committed spark-0.2 IVF_PQ snapshot stores RAW codes (fresh
+    ingests write residual codes), so this is the TVF's only reach into
+    the raw-code ADC tables, with and without the exact re-rank; the
+    spark-0.2 VAMANA snapshot walks two shards plus its overlay.  Each
+    must return exactly the kernel strategy's rows."""
+    uri = str(tmp_path / name)
+    shutil.copytree(os.path.join(GOLDEN_02, name), uri)
+    with open(os.path.join(GOLDEN_02, "expected.json")) as f:
+        queries = json.load(f)["queries"]
+    with open(os.path.join(uri, "_index_meta.json")) as f:
+        assert not json.load(f).get("pq_residual", False)
+    q = spark.createDataFrame(
+        list(enumerate(queries)), "query_id long, vector array<float>"
+    )
+    q.createOrReplaceTempView("tvf_golden_q")
+    got = [
+        (r.query_id, r.rank, r.external_id, round(r.distance, 9))
+        for r in _sql(
+            spark, uri, "tvf_golden_q", k=10, nprobe=nprobe, k_factor=k_factor
+        )
+        .orderBy("query_id", "rank")
+        .collect()
+    ]
+    qkw = {"nprobe": nprobe, "strategy": "kernel"}
+    if k_factor is not None:
+        qkw["k_factor"] = k_factor
+    want = [
+        (r.query_id, r.rank, r.external_id, round(r.distance, 9))
+        for r in open_index(spark, uri)
+        .query(q, 10, **qkw)
+        .orderBy("query_id", "rank")
+        .collect()
+    ]
+    assert len(got) == 3 * 10
     assert got == want

@@ -30,7 +30,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiledb_vector_search_spark.operators.knn import partial_topk_idx
+from tiledb_vector_search_spark.functions.distance import DistanceMetric
+from tiledb_vector_search_spark.operators.knn import block_topk
 from tiledb_vector_search_spark.operators.routing import route_queries
 from tiledb_vector_search_spark.schemas import ID_COL, VECTOR_COL
 from tiledb_vector_search_spark.storage import STORAGE_VERSION  # noqa: F401
@@ -157,19 +158,11 @@ def ivf_index_tdb(
 
 
 def _vq(db: np.ndarray, db_ids: np.ndarray, q: np.ndarray, k: int):
-    dmat = (
-        np.sum(q * q, axis=1)[:, None]
-        - 2.0 * (q @ db.T)
-        + np.sum(db * db, axis=1)[None, :]
-    )
-    idx = partial_topk_idx(dmat, db_ids, min(k, db.shape[0]))
+    rows, ids, d = block_topk(q, db, db_ids, k, DistanceMetric.SUM_OF_SQUARES)
     # partial selection is unordered — order each row by (distance, id)
-    rows = np.arange(q.shape[0])[:, None]
-    kept_d, kept_i = dmat[rows, idx], db_ids[idx]
-    for r in range(idx.shape[0]):
-        o = np.lexsort((kept_i[r], kept_d[r]))
-        kept_d[r], kept_i[r] = kept_d[r][o], kept_i[r][o]
-    return np.sqrt(np.maximum(kept_d, 0.0)), kept_i
+    o = np.lexsort((ids, d, rows))
+    keep = min(k, db.shape[0])
+    return np.sqrt(d[o]).reshape(-1, keep), ids[o].reshape(-1, keep)
 
 
 def query_vq_nth(

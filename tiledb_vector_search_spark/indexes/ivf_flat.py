@@ -42,11 +42,13 @@ from tiledb_vector_search_spark.ml.kmeans import (
     train_centroids_ml,
 )
 from tiledb_vector_search_spark.operators.knn import (
-    _kernel_distances,
+    block_topk,
     knn_bruteforce_expr,
-    partial_topk_idx,
 )
-from tiledb_vector_search_spark.operators.routing import route_queries
+from tiledb_vector_search_spark.operators.routing import (
+    queries_by_partition,
+    route_queries,
+)
 from tiledb_vector_search_spark.operators.topk import topk_window
 from tiledb_vector_search_spark.schemas import (
     DISTANCE_COL,
@@ -835,16 +837,6 @@ class IVFFlatIndex(Index):
             groups.append(cur)
         return groups
 
-    @staticmethod
-    def _dir_bytes(fs, path: str) -> int:
-        if not fs.exists(path):
-            return 0
-        it = fs._fs.listFiles(fs._p(path), True)
-        total = 0
-        while it.hasNext():
-            total += it.next().getLen()
-        return total
-
     def _query_join(
         self,
         q: DataFrame,
@@ -953,12 +945,9 @@ class IVFFlatIndex(Index):
         """
         import pandas as pd
 
-        route_map: dict[int, list[int]] = {}
-        for qid, pid in pairs:
-            route_map.setdefault(pid, []).append(qid)
+        route_map = queries_by_partition(pairs)
         qpos = {int(qid): i for i, qid in enumerate(qids)}
         bc = self.spark.sparkContext.broadcast((qids, qmat, route_map, qpos))
-        kk = k
         vdtype = self.vector_dtype
 
         def score(batches):
@@ -972,22 +961,18 @@ class IVFFlatIndex(Index):
                     routed = rmap.get(int(pid))
                     if not routed:
                         continue
-                    sub_q = qmat_l[[qpos_l[q] for q in routed]]
-                    ids = grp[ID_COL].to_numpy(dtype=np.int64)
-                    x = decode_matrix(grp[VECTOR_COL], vdtype)
-                    dmat = _kernel_distances(sub_q, x, metric)
-                    keep = min(kk, dmat.shape[1])
-                    idx = partial_topk_idx(dmat, ids, keep)
-                    nq = len(routed)
+                    rows, out_i, out_d = block_topk(
+                        qmat_l[[qpos_l[q] for q in routed]],
+                        decode_matrix(grp[VECTOR_COL], vdtype),
+                        grp[ID_COL].to_numpy(dtype=np.int64),
+                        k,
+                        metric,
+                    )
                     yield pd.DataFrame(
                         {
-                            QUERY_ID_COL: np.repeat(
-                                np.asarray(routed, dtype=np.int64), keep
-                            ),
-                            ID_COL: ids[idx.ravel()],
-                            DISTANCE_COL: dmat[
-                                np.arange(nq)[:, None], idx
-                            ].ravel(),
+                            QUERY_ID_COL: np.asarray(routed, dtype=np.int64)[rows],
+                            ID_COL: out_i,
+                            DISTANCE_COL: out_d,
                         }
                     )
 

@@ -55,10 +55,14 @@ from tiledb_vector_search_spark.ml.kmeans import (
     train_centroids_ml,
 )
 from tiledb_vector_search_spark.operators.knn import (
+    block_topk,
     knn_bruteforce_expr,
-    partial_topk_idx,
+    topk_rows,
 )
-from tiledb_vector_search_spark.operators.routing import route_queries
+from tiledb_vector_search_spark.operators.routing import (
+    queries_by_partition,
+    route_queries,
+)
 from tiledb_vector_search_spark.operators.topk import topk_window
 from tiledb_vector_search_spark.schemas import (
     DISTANCE_COL,
@@ -202,6 +206,35 @@ def assign_and_encode_kernel(
             yield out
 
     return df.mapInPandas(run, schema=schema)
+
+
+def adc_tables(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(nq, m, n_codes) asymmetric-distance lookup tables:
+    table[q, j, c] = ‖q_sub_j − cb[j, c]‖² (reference
+    ``sub_distance_asymmetric`` + table builder, ``ivf_pq_index.h:627-690``).
+    Residual indexes pass (q − centroid[pid]) as ``qmat``."""
+    m, n_codes, sub_dim = codebooks.shape
+    cb_sq = np.sum(codebooks * codebooks, axis=2)  # (m, n_codes)
+    tables = np.empty((qmat.shape[0], m, n_codes), dtype=np.float64)
+    for j in range(m):
+        qs = qmat[:, j * sub_dim : (j + 1) * sub_dim]
+        tables[:, j, :] = (
+            np.sum(qs * qs, axis=1)[:, None]
+            + cb_sq[j][None, :]
+            - 2.0 * (qs @ codebooks[j].T)
+        )
+    np.maximum(tables, 0.0, out=tables)
+    return tables
+
+
+def adc_distances(tables: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """(nq, n) approximate squared distances Σ_j table[q, j, code_j] of
+    ``n`` packed code rows (uint8, (n, m)) under each query's tables."""
+    pick = np.arange(codes.shape[1])[None, :]
+    out = np.empty((tables.shape[0], codes.shape[0]), dtype=np.float64)
+    for qi in range(tables.shape[0]):
+        out[qi] = tables[qi][pick, codes].sum(axis=1)
+    return out
 
 
 def default_num_subspaces(dims: int) -> int:
@@ -665,13 +698,21 @@ class IVFPQIndex(Index):
         overlay = self._overlay_frame()
         if overlay is None:
             return None
+
+        def collect(frame: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+            rows = self._float_vectors(frame).collect()
+            return (
+                np.array([r[ID_COL] for r in rows], dtype=np.int64),
+                np.array([r[VECTOR_COL] for r in rows], dtype=np.float64),
+            )
+
+        ov = overlay.select(ID_COL, VECTOR_COL)
         if (
             self._has_updates()
             or allowed_ids is not None
             or excluded_ids is not None
         ):
             # the bridge set must honor the call's tombstone/filter view
-            ov = overlay.select(ID_COL, VECTOR_COL)
             if self._has_updates():
                 ov = ov.join(
                     F.broadcast(self._updated_ids()), ID_COL, "left_anti"
@@ -680,37 +721,20 @@ class IVFPQIndex(Index):
                 ov = ov.join(allowed_ids, ID_COL, "left_semi")
             if excluded_ids is not None:
                 ov = ov.join(excluded_ids, ID_COL, "left_anti")
-            ov_rows = self._float_vectors(ov).collect()
-            if not ov_rows:
-                return None
-            ov_ids = np.array([r[ID_COL] for r in ov_rows], dtype=np.int64)
-            ov_mat = np.array(
-                [r[VECTOR_COL] for r in ov_rows], dtype=np.float64
-            )
+            ov_ids, ov_mat = collect(ov)
         else:
             # common path: the bridge set is immutable for a given
             # base_ts, so the bounded collect is paid once per handle —
             # repeated queries skip the job entirely
             if not hasattr(self, "_overlay_np_cache"):
-                ov_rows = self._float_vectors(
-                    overlay.select(ID_COL, VECTOR_COL)
-                ).collect()
-                self._overlay_np_cache = (
-                    np.array([r[ID_COL] for r in ov_rows], dtype=np.int64),
-                    np.array(
-                        [r[VECTOR_COL] for r in ov_rows], dtype=np.float64
-                    ),
-                )
+                self._overlay_np_cache = collect(ov)
             ov_ids, ov_mat = self._overlay_np_cache
-            if ov_ids.size == 0:
-                return None
+        if ov_ids.size == 0:
+            return None
         bc = self.spark.sparkContext.broadcast((ov_ids, ov_mat))
-        kk = min(k, len(ov_ids))
-        sqrt_out = metric is DistanceMetric.L2
 
         def score(batches):
             ids_, mat_ = bc.value
-            v_sq = np.sum(mat_ * mat_, axis=1)
             for pdf in batches:
                 n = len(pdf)
                 if n == 0:
@@ -720,25 +744,14 @@ class IVFPQIndex(Index):
                 # chunk the query axis so the (chunk × |overlay|) gram
                 # slab stays ~100 MB regardless of the Arrow batch size
                 for lo in range(0, n, 2048):
-                    qc = qmat[lo : lo + 2048]
-                    d = np.maximum(
-                        np.sum(qc * qc, axis=1)[:, None]
-                        + v_sq[None, :]
-                        - 2.0 * (qc @ mat_.T),
-                        0.0,
+                    rows, out_i, out_d = block_topk(
+                        qmat[lo : lo + 2048], mat_, ids_, k, metric
                     )
-                    idx = partial_topk_idx(d, ids_, kk)
-                    rows = np.arange(d.shape[0])[:, None]
-                    dist = d[rows, idx]
-                    if sqrt_out:
-                        dist = np.sqrt(dist)
                     yield pd.DataFrame(
                         {
-                            QUERY_ID_COL: np.repeat(
-                                qids[lo : lo + 2048], kk
-                            ),
-                            ID_COL: ids_[idx].ravel(),
-                            DISTANCE_COL: dist.ravel(),
+                            QUERY_ID_COL: qids[lo + rows],
+                            ID_COL: out_i,
+                            DISTANCE_COL: out_d,
                         }
                     )
 
@@ -1384,39 +1397,18 @@ class IVFPQIndex(Index):
         import pandas as pd
 
         cb = self.codebooks()  # (m, 256, sub_dim)
-        m, n_codes, sub_dim = cb.shape
-        nq = qmat.shape[0]
+        m = cb.shape[0]
         residual = self.pq_residual
-        cents = self.centroids() if residual else None
-
-        route_map: dict[int, list[int]] = {}
-        for qid, pid in pairs:
-            route_map.setdefault(pid, []).append(qid)
+        route_map = queries_by_partition(pairs)
         qpos = {int(qid): i for i, qid in enumerate(qids)}
         if residual:
-            payload = (qids, qmat, cb, cents, route_map, qpos)
+            payload = (qmat, cb, self.centroids(), route_map, qpos)
         else:
-            tables = np.empty((nq, m, n_codes), dtype=np.float64)
-            for j in range(m):
-                qs = qmat[:, j * sub_dim : (j + 1) * sub_dim]  # (nq, sub_dim)
-                # ‖qs − c‖² for all codes
-                tables[:, j, :] = (
-                    np.sum(qs * qs, axis=1)[:, None]
-                    + np.sum(cb[j] * cb[j], axis=1)[None, :]
-                    - 2.0 * (qs @ cb[j].T)
-                )
-            np.maximum(tables, 0.0, out=tables)
-            payload = (qids, tables, None, None, route_map, qpos)
+            payload = (adc_tables(qmat, cb), None, None, route_map, qpos)
         bc = self.spark.sparkContext.broadcast(payload)
-        kk = coarse_k
-        mm = m
-        sd = sub_dim
 
         def score(batches):
-            qids_l, tab_or_q, cb_l, cents_l, rmap, qpos_l = bc.value
-            arange_m = np.arange(mm)
-            if cb_l is not None:
-                cb_sq = np.sum(cb_l * cb_l, axis=2)  # (m, 256)
+            tab_or_q, cb_l, cents_l, rmap, qpos_l = bc.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -1424,42 +1416,26 @@ class IVFPQIndex(Index):
                     routed = rmap.get(int(pid))
                     if not routed:
                         continue
-                    ids = grp[ID_COL].to_numpy(dtype=np.int64)
-                    codes = np.frombuffer(
-                        b"".join(grp[CODE_COL]), dtype=np.uint8
-                    ).reshape(len(ids), mm)
                     rpos = [qpos_l[qid] for qid in routed]
                     if cb_l is not None:
                         # residual tables for THIS partition's routed queries
-                        qres = tab_or_q[rpos] - cents_l[int(pid)][None, :]
-                        t_pid = np.empty((len(routed), mm, cb_sq.shape[1]))
-                        for j in range(mm):
-                            qs = qres[:, j * sd : (j + 1) * sd]
-                            t_pid[:, j, :] = (
-                                np.sum(qs * qs, axis=1)[:, None]
-                                + cb_sq[j][None, :]
-                                - 2.0 * (qs @ cb_l[j].T)
-                            )
-                        np.maximum(t_pid, 0.0, out=t_pid)
-                        tabs = t_pid
+                        tabs = adc_tables(
+                            tab_or_q[rpos] - cents_l[int(pid)][None, :], cb_l
+                        )
                     else:
                         tabs = tab_or_q[rpos]
-                    keep = min(kk, len(ids))
-                    dmat = np.empty((len(routed), len(ids)))
-                    for qi in range(len(routed)):
-                        dmat[qi] = tabs[qi][
-                            arange_m[None, :], codes
-                        ].sum(axis=1)
-                    idx = partial_topk_idx(dmat, ids, keep)
+                    ids = grp[ID_COL].to_numpy(dtype=np.int64)
+                    codes = np.frombuffer(
+                        b"".join(grp[CODE_COL]), dtype=np.uint8
+                    ).reshape(len(ids), m)
+                    rows, out_i, out_d = topk_rows(
+                        adc_distances(tabs, codes), ids, coarse_k
+                    )
                     yield pd.DataFrame(
                         {
-                            QUERY_ID_COL: np.repeat(
-                                np.asarray(routed, dtype=np.int64), keep
-                            ),
-                            ID_COL: ids[idx.ravel()],
-                            DISTANCE_COL: dmat[
-                                np.arange(len(routed))[:, None], idx
-                            ].ravel(),
+                            QUERY_ID_COL: np.asarray(routed, dtype=np.int64)[rows],
+                            ID_COL: out_i,
+                            DISTANCE_COL: out_d,
                         }
                     )
 

@@ -52,7 +52,10 @@ from tiledb_vector_search_spark.ml.vamana import (
     sq_dists,
 )
 from tiledb_vector_search_spark.operators.knn import knn_bruteforce_expr
-from tiledb_vector_search_spark.operators.routing import route_queries
+from tiledb_vector_search_spark.operators.routing import (
+    queries_by_partition,
+    route_queries,
+)
 from tiledb_vector_search_spark.operators.topk import topk_window
 from tiledb_vector_search_spark.schemas import (
     DISTANCE_COL,
@@ -910,9 +913,7 @@ class VamanaIndex(Index):
         parts = sorted({p for _, p in pairs})
         base = self._base_vectors().where(F.col(PARTITION_COL).isin(parts))
 
-        route_map: dict[int, list[int]] = {}
-        for qid, pid in pairs:
-            route_map.setdefault(pid, []).append(qid)
+        route_map = queries_by_partition(pairs)
         overlay = self._overlay_frame()
         if overlay is not None:
             # the bridge graph is an extra pseudo-shard EVERY query probes

@@ -109,6 +109,14 @@ def _kernel_distances(
     return sq
 
 
+def paired_sum_of_squares(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Σ(a_i − b_i)² of each row pair, summed left to right as
+    ``distance_expr``'s ``aggregate()`` folds — bit-equal to the expr
+    strategy's exact re-rank of the same pairs."""
+    diff = a - b
+    return np.cumsum(diff * diff, axis=1)[:, -1]
+
+
 def partial_topk_idx(dmat: np.ndarray, ids: np.ndarray, keep: int) -> np.ndarray:
     """Deterministic per-row top-``keep`` column indices by (value, id) asc.
 
@@ -126,6 +134,37 @@ def partial_topk_idx(dmat: np.ndarray, ids: np.ndarray, keep: int) -> np.ndarray
     for i in np.flatnonzero(n_le > keep):
         idx[i] = np.lexsort((ids, dmat[i]))[:keep]
     return idx
+
+
+def topk_rows(
+    dmat: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each row's top-``k`` of a precomputed (rows, nb) value matrix as
+    flat (row position, id, value) arrays — ``partial_topk_idx`` plus the
+    gather every partial top-k emitter shares."""
+    keep = min(k, dmat.shape[1])
+    idx = partial_topk_idx(dmat, ids, keep)
+    rows = np.repeat(np.arange(dmat.shape[0]), keep)
+    return rows, ids[idx.ravel()], np.take_along_axis(dmat, idx, axis=1).ravel()
+
+
+def block_topk(
+    qmat: np.ndarray,
+    xmat: np.ndarray,
+    ids: np.ndarray,
+    k: int,
+    metric: DistanceMetric,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Partial top-k of one scored block: (query row position, id,
+    distance) flat arrays, ``k`` best per query under the (distance, id)
+    order (inner product: largest score first).  The scan → score →
+    partial top-k step of every numpy query kernel; a window or array
+    merge of the partials gives the global top-k."""
+    dmat = _kernel_distances(qmat, xmat, metric)
+    if metric is DistanceMetric.INNER_PRODUCT:
+        rows, out_i, out_d = topk_rows(-dmat, ids, k)
+        return rows, out_i, -out_d
+    return topk_rows(dmat, ids, k)
 
 
 def knn_bruteforce_kernel(
@@ -182,21 +221,17 @@ def knn_bruteforce_kernel(
         # the stored binary column): decode with the DECLARED dtype —
         # np.array over bytearrays reads bytes unsigned, so an int8
         # query's -1 would silently score as 255.0
-        from tiledb_vector_search_spark.functions.dtypes import BYTE_DTYPES
+        from tiledb_vector_search_spark.functions.dtypes import (
+            BYTE_DTYPES,
+            decode_matrix,
+        )
 
         if vector_dtype not in BYTE_DTYPES:
             raise ValueError(
                 "queries are packed binary but vector_dtype is "
                 f"{vector_dtype!r}; pass the corpus byte dtype"
             )
-        qmat = (
-            np.frombuffer(
-                b"".join(bytes(r[1]) for r in q_rows),
-                dtype=BYTE_DTYPES[vector_dtype],
-            )
-            .reshape(len(q_rows), -1)
-            .astype(np.float64)
-        )
+        qmat = decode_matrix([bytes(r[1]) for r in q_rows], vector_dtype)
     else:
         if expected_dims is not None:
             sizes = [len(r[1]) for r in q_rows if r[1] is not None]
@@ -214,32 +249,24 @@ def knn_bruteforce_kernel(
         qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
     spark = vectors.sparkSession
     bc = spark.sparkContext.broadcast((qids, qmat))
-    largest = metric is DistanceMetric.INNER_PRODUCT
-    kk = k
 
     def score_batches(batches):
         from tiledb_vector_search_spark.functions.dtypes import decode_matrix
 
         qids_l, qmat_l = bc.value
-        nq = len(qids_l)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            xmat = decode_matrix(pdf[vector_col], vector_dtype)
-            dmat = _kernel_distances(qmat_l, xmat, metric)
-            if largest:
-                dmat = -dmat
-            keep = min(kk, dmat.shape[1])
             # O(nb) selection per query with deterministic (dist, id) ties
-            idx = partial_topk_idx(dmat, ids, keep)
-            out_q = np.repeat(qids_l, keep)
-            out_i = ids[idx.ravel()]
-            out_d = dmat[np.arange(nq)[:, None], idx].ravel()
-            if largest:
-                out_d = -out_d
+            rows, out_i, out_d = block_topk(
+                qmat_l,
+                decode_matrix(pdf[vector_col], vector_dtype),
+                pdf[id_col].to_numpy(dtype=np.int64),
+                k,
+                metric,
+            )
             yield pd.DataFrame(
-                {QUERY_ID_COL: out_q, ID_COL: out_i, DISTANCE_COL: out_d}
+                {QUERY_ID_COL: qids_l[rows], ID_COL: out_i, DISTANCE_COL: out_d}
             )
 
     partial = vectors.select(
@@ -476,9 +503,6 @@ def knn_join(
         # per-partition BLAS scoring + partial top-k: cogroup puts one
         # partition's left slice and right members in one task — the
         # ivf_flat._query_join shape, index-free
-        largest = not asc
-        kk = k
-
         # hot-cell auto-split (see docstring): salt oversized cells so no
         # single cogroup task owns a mega-cell.  The detection aggregate
         # costs one extra pass over the right side's assignment (narrow:
@@ -529,22 +553,18 @@ def knn_join(
                 return pd.DataFrame(
                     {"__lid": [], "__rid": [], DISTANCE_COL: []}
                 )
-            lmat = np.array(list(lpdf["__lvec"]), dtype=np.float64)
-            rmat = np.array(list(rpdf["__rvec"]), dtype=np.float64)
             rids = rpdf["__rid"].to_numpy()
-            dmat = _kernel_distances(lmat, rmat, metric)
-            if largest:
-                dmat = -dmat
-            keep = min(kk, dmat.shape[1])
-            idx = partial_topk_idx(dmat, rids, keep)
-            rows = np.arange(dmat.shape[0])[:, None]
-            out_d = dmat[rows, idx].ravel()
-            if largest:
-                out_d = -out_d
+            rows, out_i, out_d = block_topk(
+                np.array(list(lpdf["__lvec"]), dtype=np.float64),
+                np.array(list(rpdf["__rvec"]), dtype=np.float64),
+                rids,
+                k,
+                metric,
+            )
             return pd.DataFrame(
                 {
-                    "__lid": np.repeat(lpdf["__lid"].to_numpy(), keep),
-                    "__rid": rids[idx.ravel()],
+                    "__lid": lpdf["__lid"].to_numpy()[rows],
+                    "__rid": out_i,
                     DISTANCE_COL: out_d,
                 }
             )

@@ -36,16 +36,23 @@ def route_queries(
     from tiledb_vector_search_spark.operators.knn import _kernel_distances
 
     nprobe = min(nprobe, centroids.shape[0])
-    # the ONE BLAS sq-L2 expansion (knn.py) — a private copy here had
-    # already drifted (no negative clamp); clamping only moves exact-hit
-    # values of ~-1e-16 to 0, where the stable argsort's index order is
-    # the documented partition-id tie-break anyway
+    # the engine's one BLAS sq-L2 expansion (knn.py); its clamp at 0
+    # only moves exact-hit values of ~-1e-16 to 0, where the stable
+    # argsort's index order is the documented partition-id tie-break
     d = _kernel_distances(qmat, centroids, DistanceMetric.SUM_OF_SQUARES)
     pairs: list[tuple[int, int]] = []
     for qi, row in zip(qids, d):
         top = np.argsort(row, kind="stable")[:nprobe]
         pairs.extend((int(qi), int(p)) for p in top)
     return pairs
+
+
+def queries_by_partition(pairs: list[tuple[int, int]]) -> dict[int, list[int]]:
+    """partition_id → [query ids routed to it, in routing order]."""
+    groups: dict[int, list[int]] = {}
+    for qid, pid in pairs:
+        groups.setdefault(pid, []).append(qid)
+    return groups
 
 
 def routing_table(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -44,6 +45,35 @@ def topk_window(
     return df.withColumn(rank_col, F.row_number().over(w)).where(
         F.col(rank_col) <= k
     )
+
+
+def topk_merge(
+    rows: np.ndarray,
+    ids: np.ndarray,
+    dists: np.ndarray,
+    k: int,
+    ascending: bool = True,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """numpy twin of ``groupBy(query, id).min(distance)`` followed by
+    :func:`topk_window`, over flat candidate arrays.
+
+    Keeps each (row, id) pair's best distance, orders each row by
+    (distance, id) — distance descending when not ``ascending``, for
+    inner-product scores — and keeps the first ``k``.  Returns (row, id,
+    distance, rank) sorted by (row, rank), rank 1..k.
+    """
+    key = dists if ascending else -dists
+    o = np.lexsort((key, ids, rows))
+    # the first row of each (row, id) run holds its best distance
+    r, i = rows[o], ids[o]
+    first = np.ones(len(o), dtype=bool)
+    first[1:] = (r[1:] != r[:-1]) | (i[1:] != i[:-1])
+    o = o[first]
+    o = o[np.lexsort((ids[o], key[o], rows[o]))]
+    rank = np.arange(1, len(o) + 1) - np.searchsorted(rows[o], rows[o])
+    top = rank <= k
+    o = o[top]
+    return rows[o], ids[o], dists[o], rank[top]
 
 
 def pad_to_k(

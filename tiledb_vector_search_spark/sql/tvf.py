@@ -7,11 +7,16 @@ SURVEY §4's "optional future" item: once registered, a SQL-only user runs
         '/path/to/ivf_index', 10, 4)
 
 with no DataFrame code.  Spark distributes the query table across tasks;
-each task's UDTF instance performs an IVF search for its query slice by
-reading the index FILES directly with pyarrow — centroids first (tiny),
-then ONLY the probed ``partition_id=P`` directories.  That is the same
-partition-pruned IO the DataFrame path gets from Catalyst, obtained here
-by file listing, because executors have no SparkSession to plan with.
+each task's UDTF instance searches its query slice, for any of the four
+index types, by reading the index FILES directly with pyarrow — meta and
+centroids first (tiny), then ONLY the probed ``partition_id=P``
+directories.  That is the same partition-pruned IO the DataFrame path
+gets from Catalyst, obtained here by file listing, because executors
+have no SparkSession to plan with.  Scoring, partial top-k and the final
+merge run through the DataFrame kernel strategy's own per-block
+functions (``operators.knn.block_topk``, ``indexes.ivf_pq.adc_tables``,
+``indexes.vamana._walk_shard``, ``operators.topk.topk_merge``), so the
+two surfaces cannot drift apart.
 This mirrors the reference's embedded query model (each worker owns its
 own reads, ``detail/ivf/qv.h``) while Spark handles distribution of the
 queries.
@@ -61,9 +66,24 @@ reference's normal deployment) is reachable from pure SQL.
 from __future__ import annotations
 
 import json
+import math
 import posixpath
 
 import numpy as np
+
+from tiledb_vector_search_spark.functions.distance import DistanceMetric
+from tiledb_vector_search_spark.functions.dtypes import decode_matrix
+from tiledb_vector_search_spark.operators.knn import (
+    block_topk,
+    paired_sum_of_squares,
+    topk_rows,
+)
+from tiledb_vector_search_spark.operators.routing import (
+    queries_by_partition,
+    route_queries,
+)
+from tiledb_vector_search_spark.operators.topk import topk_merge
+from tiledb_vector_search_spark.schemas import DISTANCE_COL, ID_COL, QUERY_ID_COL
 
 ANN_SEARCH_SCHEMA = "query_id long, external_id long, distance double, rank long"
 
@@ -74,6 +94,7 @@ ANN_SEARCH_SCHEMA = "query_id long, external_id long, distance double, rank long
 # types reject IP at ingest)
 _SUPPORTED_METRICS = {"sum_of_squares", "l2", "cosine"}
 _FLAT_ONLY_METRICS = {"inner_product"}
+_NO_IDS = np.empty(0, dtype=np.int64)
 
 
 def _resolve_fs(path: str):
@@ -154,7 +175,7 @@ _TVF_INDEX_TYPES = ("FLAT", "IVF_FLAT", "IVF_PQ", "VAMANA")
 
 def _open_index_meta(
     uri: str, timestamp: int | None = None
-) -> tuple[dict, int, str, str]:
+) -> tuple[dict, int, str, str, bool]:
     """(meta, base_ts, metric, vector_dtype, has_pending) validations.
 
     ``timestamp`` time-travels: the newest ingestion ≤ timestamp is read
@@ -198,8 +219,7 @@ def _open_index_meta(
 def _load_centroids(uri: str, ts: int) -> np.ndarray:
     cent_tb = _read_parquet_dir(posixpath.join(uri, "centroids", f"ts={ts}"))
     order = np.argsort(cent_tb.column("partition_id").to_numpy())
-    cent_rows = cent_tb.column("centroid").to_pylist()
-    return np.array([cent_rows[i] for i in order], dtype=np.float64)
+    return np.array(cent_tb.column("centroid").to_pylist(), dtype=np.float64)[order]
 
 
 def _load_updates(
@@ -221,7 +241,7 @@ def _load_updates(
     landed but whose meta write crashed must stay invisible (same
     filter ``IndexStorage.read_updates_raw`` applies).
     """
-    empty = np.empty(0, dtype=np.int64)
+    empty = _NO_IDS
     ufs, files = _list_parquet_files(posixpath.join(uri, "updates"))
     if not files:
         return empty, empty, None
@@ -284,26 +304,14 @@ def _load_updates(
     return tomb, add_ids, add_mat
 
 
-def _mask_tombstones(
-    ids: np.ndarray, tomb: np.ndarray
-) -> np.ndarray | None:
-    """Boolean keep-mask over ``ids``, or None when nothing is masked."""
-    if len(tomb) == 0:
-        return None
-    keep = ~np.isin(ids, tomb)
-    return None if keep.all() else keep
-
-
 def _keep_mask(
     ids: np.ndarray, tomb: np.ndarray, allowed: np.ndarray | None
-) -> np.ndarray | None:
-    """Tombstone-exclude ∧ allowed-include keep-mask, or None if total."""
-    keep = np.ones(len(ids), dtype=bool)
-    if len(tomb):
-        keep &= ~np.isin(ids, tomb)
+) -> np.ndarray:
+    """Tombstone-exclude ∧ allowed-include keep-mask."""
+    keep = ~np.isin(ids, tomb)
     if allowed is not None:
         keep &= np.isin(ids, allowed)
-    return None if keep.all() else keep
+    return keep
 
 
 def _load_allowed(path: str) -> np.ndarray:
@@ -312,78 +320,19 @@ def _load_allowed(path: str) -> np.ndarray:
     return tb.column("external_id").to_numpy().astype(np.int64)
 
 
-def _extend_with_additions(
-    out: dict[int, list[tuple[float, int]]],
-    qmat: np.ndarray,
-    add_ids: np.ndarray,
-    add_mat: np.ndarray | None,
-    k: int,
-    metric: str,
-) -> None:
-    """Brute-force-score additions for every query and merge into ``out``
-    — the ``knn_bruteforce_expr(additions) unionByName`` branch of the
-    DataFrame paths.  ``metric`` is the INTERNAL scoring space of the
-    caller (squared for sos/l2 pre-finalize; cosine direct)."""
-    if add_mat is None or len(add_ids) == 0:
-        return
-    dm = _pairwise_distances(qmat, add_mat, metric)
-    keep = min(k, dm.shape[1])
-    for qi in range(qmat.shape[0]):
-        idx = np.lexsort((add_ids, dm[qi]))[:keep]
-        out[qi].extend((float(dm[qi, j]), int(add_ids[j])) for j in idx)
-
-
-def _route_files(
-    qmat: np.ndarray, centroids: np.ndarray, nprobe: int
-) -> dict[int, list[int]]:
-    """partition_id → [query positions]: per query the nprobe nearest
-    centroids, ties by partition id (same contract as ``route_queries``)."""
-    d = (
-        np.sum(qmat * qmat, axis=1)[:, None]
-        + np.sum(centroids * centroids, axis=1)[None, :]
-        - 2.0 * (qmat @ centroids.T)
-    )
-    nprobe = min(nprobe, centroids.shape[0])
-    part_queries: dict[int, list[int]] = {}
-    for qi in range(qmat.shape[0]):
-        probes = np.argsort(d[qi], kind="stable")[:nprobe]
-        for p in probes:
-            part_queries.setdefault(int(p), []).append(qi)
-    return part_queries
-
-
-def _pairwise_distances(qmat: np.ndarray, x: np.ndarray, metric: str) -> np.ndarray:
-    """(nq, nb) distance matrix — cosine matches the engine kernel's
-    1 − ip/(|q||x|) form; sos/l2 use the BLAS identity (l2's sqrt is
-    applied at finalize so per-partition merges compare squared values,
-    same as the DataFrame path).  inner_product returns NEGATED scores so
-    ascending merge order = best-first; finalize negates back."""
-    if metric == "inner_product":
-        return -(qmat @ x.T)
-    if metric == "cosine":
-        ip = qmat @ x.T
-        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-        xn = np.linalg.norm(x, axis=1, keepdims=True)
-        denom = qn @ xn.T
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return 1.0 - np.where(denom > 0, ip / denom, 0.0)
-    dm = (
-        np.sum(qmat * qmat, axis=1)[:, None]
-        + np.sum(x * x, axis=1)[None, :]
-        - 2.0 * (qmat @ x.T)
-    )
-    np.maximum(dm, 0.0, out=dm)
-    return dm
-
-
-def _decode_vector_column(tb, vector_dtype: str, n: int) -> np.ndarray:
-    if vector_dtype == "float32":
-        return np.array(tb.column("vector").to_pylist(), dtype=np.float64)
-    raw = np.frombuffer(
-        b"".join(tb.column("vector").to_pylist()),
-        dtype=np.uint8 if vector_dtype == "uint8" else np.int8,
-    )
-    return raw.reshape(n, -1).astype(np.float64)
+def _read_vectors(
+    path: str,
+    vector_dtype: str,
+    tomb: np.ndarray = _NO_IDS,
+    allowed: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(external ids, float64 vectors) of one snapshot directory, with
+    tombstoned and not-allowed rows dropped."""
+    tb = _read_parquet_dir(path, columns=["external_id", "vector"])
+    ids = tb.column("external_id").to_numpy()
+    x = decode_matrix(tb.column("vector").to_pylist(), vector_dtype)
+    keep = _keep_mask(ids, tomb, allowed)
+    return ids[keep], x[keep]
 
 
 def _normalize_queries_f32(qmat: np.ndarray) -> np.ndarray:
@@ -396,26 +345,81 @@ def _normalize_queries_f32(qmat: np.ndarray) -> np.ndarray:
     return normed.astype(np.float32).astype(np.float64)
 
 
-def _finalize(
-    qids: np.ndarray,
-    out: dict[int, list[tuple[float, int]]],
+def _probes(
+    uri: str, ts: int, qmat: np.ndarray, centroids: np.ndarray, nprobe: int
+):
+    """(partition id, partition directory, routed query positions) of every
+    probed partition that holds rows, in partition order — the DataFrame
+    path's ``route_queries`` decisions, read as a directory listing."""
+    pairs = route_queries(np.arange(len(qmat)), qmat, centroids, nprobe)
+    base = posixpath.join(uri, "base", f"ts={ts}")
+    for pid, qpos in sorted(queries_by_partition(pairs).items()):
+        pdir = posixpath.join(base, f"partition_id={pid}")
+        if _is_dir(pdir):  # an empty partition writes no directory
+            yield pid, pdir, np.asarray(qpos, dtype=np.int64)
+
+
+def _scan_block(
+    qmat: np.ndarray,
+    ids: np.ndarray,
+    x: np.ndarray,
     k: int,
-    sqrt: bool = False,
+    metric: DistanceMetric,
+    qpos: np.ndarray | None = None,
+) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """``block_topk`` of the queries at ``qpos`` (default: all) over one
+    block, its rows mapped back to query positions — as a list of zero
+    parts (empty block) or one."""
+    if len(ids) == 0:
+        return []
+    if qpos is None:
+        qpos = np.arange(len(qmat))
+    rows, out_i, out_d = block_topk(qmat[qpos], x, ids, k, metric)
+    return [(qpos[rows], out_i, out_d)]
+
+
+def _overlay_parts(
+    uri, aux, ts, vector_dtype, qmat, k, metric, tomb, allowed
+) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Exact scan of an IVF partial-probe overlay (aux pseudo-partition
+    of RAW vectors) for EVERY query, mirroring the DataFrame query paths.
+    The persisted recall curve is measured WITH overlay probing, so
+    skipping it would silently under-deliver any recall_target resolved
+    from it.  A member whose home partition was also probed appears
+    twice; the merge's min() per (query, id) keeps the tighter estimate,
+    exactly the DataFrame path's groupBy(query, id).agg(min(distance))."""
+    ov_dir = posixpath.join(uri, "aux", aux, f"ts={ts}")
+    if not _is_dir(ov_dir):
+        return []
+    ids, x = _read_vectors(ov_dir, vector_dtype, tomb, allowed)
+    return _scan_block(qmat, ids, x, k, metric)
+
+
+def _final_rows(
+    qids: np.ndarray,
+    parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
+    k: int,
+    metric: str,
     halve: bool = False,
-    negate: bool = False,
 ) -> list[tuple[int, int, float, int]]:
-    results: list[tuple[int, int, float, int]] = []
-    for qi in range(len(qids)):
-        merged = sorted(out[qi])[:k]
-        for rank, (dist, eid) in enumerate(merged, 1):
-            if sqrt:
-                dist = float(np.sqrt(dist))
-            elif halve:
-                dist = dist / 2.0
-            elif negate:  # inner_product: undo the merge-order negation
-                dist = -dist
-            results.append((int(qids[qi]), eid, dist, rank))
-    return results
+    """Merge every block's partial top-k into (query_id, external_id,
+    distance, rank) rows: min per (query, id), (distance, id) order,
+    first k — then the metric's rescale (l2 scans in squared space;
+    ``halve`` maps a unit-vector sos scan to cosine distance)."""
+    if not parts:
+        return []
+    rows, ids, dist, rank = topk_merge(
+        *(np.concatenate(col) for col in zip(*parts)),
+        k,
+        ascending=metric != "inner_product",
+    )
+    if metric == "l2":
+        dist = np.sqrt(dist)
+    elif halve:
+        dist = dist / 2.0
+    return list(
+        zip(qids[rows].tolist(), ids.tolist(), dist.tolist(), rank.tolist())
+    )
 
 
 def _resolve_recall_target_meta(
@@ -469,11 +473,18 @@ def search_index_files(
     base, no centroids) and are ignored, mirroring the DataFrame
     intercept.  A range covering the corpus start is fold-equivalent to
     the plain ``timestamp`` read and falls through.
+
+    Every index type yields per-block partial top-k's — scored by the
+    DataFrame kernel strategy's own per-block functions — that one array
+    merge (``_final_rows``) reduces.
     """
+    allowed = (
+        None if allowed_ids_path is None else _load_allowed(allowed_ids_path)
+    )
     if start_timestamp is not None:
         meta0, _lts, metric0, _vd, _p = _open_index_meta(uri, None)
         if int(start_timestamp) > int(meta0["ingestions"][0]["ts"]):
-            tomb, add_ids, add_mat = _load_updates(
+            _tomb, add_ids, add_mat = _load_updates(
                 uri,
                 int(start_timestamp) - 1,  # (lo exclusive] → [start, end]
                 timestamp,
@@ -481,25 +492,13 @@ def search_index_files(
                     int(t) for t in meta0.get("update_batches", [])
                 ],
             )
-            if allowed_ids_path is not None and add_mat is not None:
-                keep = np.isin(add_ids, _load_allowed(allowed_ids_path))
-                add_ids, add_mat = add_ids[keep], add_mat[keep]
-            if add_mat is None or len(add_ids) == 0:
-                return []
-            dm = _pairwise_distances(qmat, add_mat, metric0)
-            keep_n = min(k, dm.shape[1])
-            out: dict[int, list[tuple[float, int]]] = {}
-            for qi in range(len(qids)):
-                order = np.lexsort((add_ids, dm[qi]))[:keep_n]
-                out[qi] = [
-                    (float(dm[qi, j]), int(add_ids[j])) for j in order
-                ]
-            return _finalize(
-                qids, out, k,
-                sqrt=metric0 == "l2",
-                negate=metric0 == "inner_product",
+            parts = _additions_topk(
+                qmat, add_ids, add_mat, allowed, k, _scan_metric(metric0)
             )
+            return _final_rows(qids, parts, k, metric0)
     meta, ts, metric, vector_dtype, pending = _open_index_meta(uri, timestamp)
+    index_type = meta["index_type"]
+    l_search = None
     if recall_target is not None:
         if nprobe != 0 or k_factor != 1.0:
             raise ValueError(
@@ -513,472 +512,247 @@ def search_index_files(
         l_search = None if l_search is None else int(l_search)
     elif nprobe == 0:
         raise ValueError("nprobe=0 is the recall_target sentinel; set one")
-    else:
-        l_search = None
-    upd = (
+    if allowed is not None and index_type == "VAMANA":
+        raise ValueError(
+            "allowed_ids filtering supports FLAT/IVF_FLAT/IVF_PQ; "
+            "VAMANA uses the over-fetch path (a pre-filtered graph "
+            "walk changes recall semantics)"
+        )
+    if k_factor != 1.0 and index_type != "IVF_PQ":
+        raise ValueError("k_factor applies to IVF_PQ indexes only")
+    tomb, add_ids, add_mat = (
         _load_updates(
             uri, ts, timestamp,
             committed_ts=[int(t) for t in meta.get("update_batches", [])],
         )
         if pending
-        else (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), None)
+        else (_NO_IDS, _NO_IDS, None)
     )
-    allowed = None
-    if allowed_ids_path is not None:
-        if meta["index_type"] == "VAMANA":
-            raise ValueError(
-                "allowed_ids filtering supports FLAT/IVF_FLAT/IVF_PQ; "
-                "VAMANA uses the over-fetch path (a pre-filtered graph "
-                "walk changes recall semantics)"
-            )
-        allowed = _load_allowed(allowed_ids_path)
-        tomb_, add_ids_, add_mat_ = upd
-        if add_mat_ is not None and len(add_ids_):
-            keep = np.isin(add_ids_, allowed)
-            upd = (tomb_, add_ids_[keep], add_mat_[keep])
-    if meta["index_type"] == "IVF_PQ":
-        return _search_ivf_pq_files(
-            uri, meta, ts, metric, vector_dtype, qids, qmat, k, nprobe,
-            k_factor, upd, allowed,
-        )
-    if k_factor != 1.0:
-        raise ValueError("k_factor applies to IVF_PQ indexes only")
-    if meta["index_type"] == "VAMANA":
-        return _search_vamana_files(
-            uri, ts, metric, vector_dtype, qids, qmat, k, nprobe, upd,
-            l_search=l_search,
-        )
-    if meta["index_type"] == "FLAT":
-        return _search_flat_files(
-            uri, ts, metric, vector_dtype, qids, qmat, k, upd, allowed
-        )
-
-    if metric == "cosine":
-        # the DataFrame path normalizes queries (float32-cast) before
-        # routing and scores 1 − ip/(|q||x|) in the kernel — mirror both
+    if metric == "cosine" and index_type != "FLAT":
+        # IVF_FLAT/VAMANA store pre-normalized vectors (normalize_on_write);
+        # mirror the DataFrame path's query normalization.  FLAT scores
+        # raw vectors with the kernel's cosine formula
         qmat = _normalize_queries_f32(qmat)
-    tomb, add_ids, add_mat = upd
-    centroids = _load_centroids(uri, ts)
-    base = posixpath.join(uri, "base", f"ts={ts}")
-    part_queries = _route_files(qmat, centroids, nprobe)
-
-    out: dict[int, list[tuple[float, int]]] = {qi: [] for qi in range(len(qids))}
-    for pid, qlist in sorted(part_queries.items()):
-        pdir = posixpath.join(base, f"partition_id={pid}")
-        if not _is_dir(pdir):
-            continue  # empty partition: no directory was written
-        tb = _read_parquet_dir(pdir, columns=["external_id", "vector"])
-        ids = tb.column("external_id").to_numpy()
-        x = _decode_vector_column(tb, vector_dtype, len(ids))
-        mask = _keep_mask(ids, tomb, allowed)
-        if mask is not None:
-            ids, x = ids[mask], x[mask]
-            if len(ids) == 0:
-                continue
-        sub = qmat[qlist]
-        dm = _pairwise_distances(sub, x, metric)
-        keep = min(k, dm.shape[1])
-        for row, qi in enumerate(qlist):
-            idx = np.lexsort((ids, dm[row]))[:keep]
-            out[qi].extend((float(dm[row, j]), int(ids[j])) for j in idx)
-
-    # partial-probe overlay: EVERY query scans the bridge pseudo-
-    # partition exactly, mirroring IVFFlatIndex.query — the persisted
-    # recall curve is measured WITH overlay probing, so skipping it here
-    # would silently under-deliver any recall_target resolved from it.
-    # Overlay rows are copies of base rows (pre-normalized for cosine),
-    # scored in the loop's own internal space; a member whose home
-    # partition was also probed appears twice and min() dedups, exactly
-    # the DataFrame path's groupBy(query, id).agg(min(distance))
-    ov_dir = posixpath.join(uri, "aux", "ivf_overlay", f"ts={ts}")
-    if _is_dir(ov_dir):
-        ov_tb = _read_parquet_dir(ov_dir, columns=["external_id", "vector"])
-        ov_ids = ov_tb.column("external_id").to_numpy()
-        ov_x = _decode_vector_column(ov_tb, vector_dtype, len(ov_ids))
-        ov_mask = _keep_mask(ov_ids, tomb, allowed)
-        if ov_mask is not None:
-            ov_ids, ov_x = ov_ids[ov_mask], ov_x[ov_mask]
-        if len(ov_ids):
-            ov_dm = _pairwise_distances(qmat, ov_x, metric)
-            ov_keep = min(k, ov_dm.shape[1])
-            for qi in range(len(qids)):
-                idx = np.lexsort((ov_ids, ov_dm[qi]))[:ov_keep]
-                out[qi].extend(
-                    (float(ov_dm[qi, j]), int(ov_ids[j])) for j in idx
-                )
-            for qi in out:
-                best: dict[int, float] = {}
-                for d, eid in out[qi]:
-                    if eid not in best or d < best[eid]:
-                        best[eid] = d
-                out[qi] = [(d, eid) for eid, d in best.items()]
-
-    # additions scored in the same internal space the loop used (sos/l2
-    # stay squared until _finalize's sqrt; cosine is direct) — stored
-    # additions are pre-normalized for cosine (normalize_on_write), and
-    # _pairwise_distances' cosine form is scale-invariant regardless
-    _extend_with_additions(out, qmat, add_ids, add_mat, k, metric)
-    return _finalize(qids, out, k, sqrt=metric == "l2")
+    scan = _scan_metric(metric, index_type)
+    if index_type == "FLAT":
+        # the whole corpus per task — exactly the FLAT contract; the
+        # partition-pruned types are the scale path
+        ids, x = _read_vectors(
+            posixpath.join(uri, "base", f"ts={ts}"), vector_dtype, tomb,
+            allowed,
+        )
+        parts = _scan_block(qmat, ids, x, k, scan)
+    elif index_type == "IVF_FLAT":
+        parts = _ivf_flat_parts(
+            uri, ts, vector_dtype, qmat, k, nprobe, scan, tomb, allowed
+        )
+    elif index_type == "IVF_PQ":
+        parts = _ivf_pq_parts(
+            uri, meta, ts, vector_dtype, qmat, k, nprobe, k_factor, tomb,
+            allowed,
+        )
+    else:
+        parts = _vamana_parts(
+            uri, ts, vector_dtype, qmat, k, nprobe, tomb, l_search
+        )
+    # additions are scored exactly and join the merge — the DataFrame
+    # paths' knn_bruteforce_expr(additions) unionByName branch
+    parts += _additions_topk(qmat, add_ids, add_mat, allowed, k, scan)
+    return _final_rows(
+        qids, parts, k, metric,
+        halve=index_type == "VAMANA" and metric == "cosine",
+    )
 
 
-def _search_ivf_pq_files(
-    uri: str,
-    meta: dict,
-    ts: int,
-    metric: str,
-    vector_dtype: str,
-    qids: np.ndarray,
+def _scan_metric(metric: str, index_type: str = "FLAT") -> DistanceMetric:
+    """The space blocks are scored and merged in: l2 merges squared and
+    takes the sqrt at the end; the VAMANA walk and the IVF_PQ tables are
+    sos (unit vectors: cosine distance = sos/2).  A base-less range read
+    scores raw additions, as FLAT does."""
+    if index_type in ("IVF_PQ", "VAMANA") or metric == "l2":
+        return DistanceMetric.SUM_OF_SQUARES
+    return DistanceMetric(metric)
+
+
+def _additions_topk(
     qmat: np.ndarray,
+    add_ids: np.ndarray,
+    add_mat: np.ndarray | None,
+    allowed: np.ndarray | None,
     k: int,
-    nprobe: int,
-    k_factor: float,
-    upd: tuple[np.ndarray, np.ndarray, np.ndarray | None],
-    allowed: np.ndarray | None = None,
-) -> list[tuple[int, int, float, int]]:
-    """ADC scan over the packed ``code`` column + optional exact re-rank.
+    metric: DistanceMetric,
+) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """The resolved additions' partial top-k (none when nothing survives
+    the allowed-ids filter)."""
+    if add_mat is None:
+        return []
+    keep = _keep_mask(add_ids, _NO_IDS, allowed)
+    return _scan_block(qmat, add_ids[keep], add_mat[keep], k, metric)
 
-    Mirrors ``IVFPQIndex.query(strategy="kernel")`` exactly: the same
-    per-query lookup tables (``ivf_pq.py:_adc_scores``), (distance, id)
-    tie-breaks, and metric scaling — pinned by a parity test.  Per-task IO:
-    the coarse pass reads (external_id, code) of probed partitions only —
-    ``num_subspaces`` bytes per row — and the re-rank pass re-reads ONLY
-    the candidate rows' partitions' (external_id, vector).
-    """
-    import math
 
-    tomb, add_ids, add_mat = upd
-    m = int(meta["num_subspaces"])
+def _ivf_flat_parts(
+    uri, ts, vector_dtype, qmat, k, nprobe, scan, tomb, allowed
+):
+    """Exact scan of each probed partition for the queries routed to it,
+    plus the partial-probe overlay."""
+    parts = []
     centroids = _load_centroids(uri, ts)
+    for _pid, pdir, qpos in _probes(uri, ts, qmat, centroids, nprobe):
+        ids, x = _read_vectors(pdir, vector_dtype, tomb, allowed)
+        parts += _scan_block(qmat, ids, x, k, scan, qpos)
+    return parts + _overlay_parts(
+        uri, "ivf_overlay", ts, vector_dtype, qmat, k, scan, tomb, allowed
+    )
 
-    # codebooks aux table → (m, n_codes, sub_dim)
-    cb_tb = _read_parquet_dir(posixpath.join(uri, "aux", "pq_codebooks", f"ts={ts}"))
+
+def _load_codebooks(uri: str, ts: int, m: int) -> np.ndarray:
+    """The PQ codebooks aux table as an (m, n_codes, sub_dim) array."""
+    cb_tb = _read_parquet_dir(
+        posixpath.join(uri, "aux", "pq_codebooks", f"ts={ts}")
+    )
     subspace = cb_tb.column("subspace").to_numpy()
     code = cb_tb.column("code").to_numpy()
     cents = cb_tb.column("centroid").to_pylist()
-    n_codes = int(code.max()) + 1
-    sub_dim = len(cents[0])
-    cb = np.empty((m, n_codes, sub_dim), dtype=np.float64)
-    for j, c, v in zip(subspace, code, cents):
-        cb[int(j), int(c)] = v
+    cb = np.empty((m, int(code.max()) + 1, len(cents[0])), dtype=np.float64)
+    cb[subspace, code] = cents
+    return cb
 
-    # per-query ADC tables: table[q, j, c] = ||q_sub_j − cb[j, c]||².
-    # residual indexes (meta pq_residual, storage spark-0.3) shift the
-    # target by the probed partition's centroid — tables are then built
-    # per (partition, routed query) inside the partition loop, mirroring
-    # IVFPQIndex._adc_scores exactly.
+
+def _ivf_pq_parts(
+    uri, meta, ts, vector_dtype, qmat, k, nprobe, k_factor, tomb, allowed
+):
+    """ADC scan over the packed ``code`` column + optional exact re-rank.
+
+    Mirrors ``IVFPQIndex.query(strategy="kernel")``: the same ADC tables
+    and code sums (``indexes.ivf_pq.adc_tables`` / ``adc_distances``),
+    per-partition residual tables for spark-0.3 indexes, and the
+    (distance, id) tie-break.  Per-task IO: the coarse pass reads
+    (external_id, code) of probed partitions only — ``num_subspaces``
+    bytes per row — and the re-rank pass re-reads ONLY the candidate
+    rows' partitions' (external_id, vector).
+    """
+    from tiledb_vector_search_spark.indexes.ivf_pq import (
+        adc_distances,
+        adc_tables,
+    )
+
+    m = int(meta["num_subspaces"])
+    centroids = _load_centroids(uri, ts)
+    cb = _load_codebooks(uri, ts, m)
     residual = bool(meta.get("pq_residual", False))
-    nq = qmat.shape[0]
-    cb_sq = np.sum(cb * cb, axis=2)  # (m, n_codes)
-
-    def _build_tables(q_block: np.ndarray) -> np.ndarray:
-        t = np.empty((q_block.shape[0], m, n_codes), dtype=np.float64)
-        for j in range(m):
-            qs = q_block[:, j * sub_dim : (j + 1) * sub_dim]
-            t[:, j, :] = (
-                np.sum(qs * qs, axis=1)[:, None]
-                + cb_sq[j][None, :]
-                - 2.0 * (qs @ cb[j].T)
-            )
-        np.maximum(t, 0.0, out=t)
-        return t
-
-    if not residual:
-        tables = _build_tables(qmat)
-
-    base = posixpath.join(uri, "base", f"ts={ts}")
-    part_queries = _route_files(qmat, centroids, nprobe)
+    tables = None if residual else adc_tables(qmat, cb)
     coarse_k = max(k, int(math.ceil(k * k_factor)))
-    arange_m = np.arange(m)
-
-    out: dict[int, list[tuple[float, int]]] = {qi: [] for qi in range(nq)}
-    cand_pids: dict[int, set[int]] = {}  # external_id -> candidate partitions
-    for pid, qlist in sorted(part_queries.items()):
-        pdir = posixpath.join(base, f"partition_id={pid}")
-        if not _is_dir(pdir):
-            continue
+    coarse, coarse_pid = [], []
+    for pid, pdir, qpos in _probes(uri, ts, qmat, centroids, nprobe):
         tb = _read_parquet_dir(pdir, columns=["external_id", "code"])
         ids = tb.column("external_id").to_numpy()
         codes = np.frombuffer(
             b"".join(tb.column("code").to_pylist()), dtype=np.uint8
         ).reshape(len(ids), m)
-        mask = _keep_mask(ids, tomb, allowed)
-        if mask is not None:
-            ids, codes = ids[mask], codes[mask]
-            if len(ids) == 0:
-                continue
-        keep = min(coarse_k, len(ids))
-        if residual:
-            pid_tables = _build_tables(qmat[qlist] - centroids[pid][None, :])
-        for i, qi in enumerate(qlist):
-            t = pid_tables[i] if residual else tables[qi]
-            dv = t[arange_m[None, :], codes].sum(axis=1)
-            idx = np.lexsort((ids, dv))[:keep]
-            out[qi].extend((float(dv[j]), int(ids[j])) for j in idx)
-            for j in idx:
-                cand_pids.setdefault(int(ids[j]), set()).add(pid)
-
-    # partial-probe overlay (aux pseudo-partition of RAW vectors):
-    # EVERY query scores the bridge set EXACTLY in sos space — the
-    # persisted recall curve is measured WITH overlay probing, so the
-    # SQL twin must probe it too or a resolved recall_target silently
-    # under-delivers.  min() per (query, id) keeps the tighter estimate
-    # when a member's home partition was also probed (exact vs ADC, or
-    # exact vs exact after a re-rank) — the DataFrame path's
-    # groupBy(query, id).agg(min(distance)) semantics.
-    ov_dir = posixpath.join(uri, "aux", "pq_overlay", f"ts={ts}")
-    ov: tuple[np.ndarray, np.ndarray] | None = None
-    if _is_dir(ov_dir):
-        ov_tb = _read_parquet_dir(ov_dir, columns=["external_id", "vector"])
-        ov_ids = ov_tb.column("external_id").to_numpy()
-        ov_x = _decode_vector_column(ov_tb, vector_dtype, len(ov_ids))
-        ov_mask = _keep_mask(ov_ids, tomb, allowed)
-        if ov_mask is not None:
-            ov_ids, ov_x = ov_ids[ov_mask], ov_x[ov_mask]
-        if len(ov_ids):
-            ov = (ov_ids, ov_x)
-
-    def _merge_overlay(target: dict[int, list[tuple[float, int]]]) -> None:
-        if ov is None:
-            return
-        o_ids, o_x = ov
-        dm = _pairwise_distances(qmat, o_x, "sum_of_squares")
-        o_keep = min(k, dm.shape[1])
-        for qi in range(nq):
-            idx = np.lexsort((o_ids, dm[qi]))[:o_keep]
-            target[qi].extend(
-                (float(dm[qi, j]), int(o_ids[j])) for j in idx
-            )
-        for qi in target:
-            best: dict[int, float] = {}
-            for d, eid in target[qi]:
-                if eid not in best or d < best[eid]:
-                    best[eid] = d
-            target[qi] = [(d, eid) for eid, d in best.items()]
-
-    if k_factor <= 1.0:
-        _merge_overlay(out)
-        # additions are scored EXACTLY (the DataFrame path's
-        # knn_bruteforce_expr branch) and merge with the base's ADC
-        # approximations — identical to IVFPQIndex.query semantics
-        _extend_with_additions(out, qmat, add_ids, add_mat, k, "sum_of_squares")
-        return _finalize(qids, out, k, sqrt=metric == "l2")
-
-    # exact re-rank: trim to coarse_k per query, then re-score those ids
-    # from the ORIGINAL vectors of just the partitions candidates live in
-    needed: dict[int, set[int]] = {}  # pid -> external ids to load
-    per_q_cand: dict[int, list[int]] = {}
-    for qi in range(nq):
-        cand = [eid for _, eid in sorted(out[qi])[:coarse_k]]
-        per_q_cand[qi] = cand
-        for eid in cand:
-            for pid in cand_pids[eid]:
-                needed.setdefault(pid, set()).add(eid)
-    vec_of: dict[int, np.ndarray] = {}
-    for pid, eids in sorted(needed.items()):
-        pdir = posixpath.join(base, f"partition_id={pid}")
-        tb = _read_parquet_dir(pdir, columns=["external_id", "vector"])
-        ids = tb.column("external_id").to_numpy()
-        x = _decode_vector_column(tb, vector_dtype, len(ids))
-        mask = np.isin(ids, np.fromiter(eids, dtype=np.int64))
-        for eid, vec in zip(ids[mask], x[mask]):
-            vec_of[int(eid)] = vec
-
-    exact: dict[int, list[tuple[float, int]]] = {}
-    for qi in range(nq):
-        qv = qmat[qi]
-        scored = []
-        for eid in set(per_q_cand[qi]):
-            diff = vec_of[eid] - qv
-            scored.append((float(np.dot(diff, diff)), eid))
-        exact[qi] = scored
-    _merge_overlay(exact)
-    # additions bypass the coarse/re-rank pair entirely — they are exact
-    # from the start (the DataFrame path unions them after the re-rank)
-    _extend_with_additions(exact, qmat, add_ids, add_mat, k, "sum_of_squares")
-    return _finalize(qids, exact, k, sqrt=metric == "l2")
-
-
-def _search_flat_files(
-    uri: str,
-    ts: int,
-    metric: str,
-    vector_dtype: str,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    k: int,
-    upd: tuple[np.ndarray, np.ndarray, np.ndarray | None],
-    allowed: np.ndarray | None = None,
-) -> list[tuple[int, int, float, int]]:
-    """Brute-force scan of the (unpartitioned) FLAT snapshot.
-
-    Per-task IO = the whole corpus — exactly the FLAT contract; the
-    partition-pruned types are the scale path.  ``nprobe`` does not apply.
-    Updates fold into the scanned set itself (``effective_vectors``
-    semantics: base ∖ updated_ids ∪ additions).
-    """
-    tomb, add_ids, add_mat = upd
-    base = posixpath.join(uri, "base", f"ts={ts}")
-    tb = _read_parquet_dir(base, columns=["external_id", "vector"])
-    ids = tb.column("external_id").to_numpy()
-    x = _decode_vector_column(tb, vector_dtype, len(ids))
-    mask = _keep_mask(ids, tomb, allowed)
-    if mask is not None:
-        ids, x = ids[mask], x[mask]
-    if add_mat is not None and len(add_ids):
+        keep = _keep_mask(ids, tomb, allowed)
+        ids, codes = ids[keep], codes[keep]
         if len(ids) == 0:
-            ids, x = add_ids, add_mat
+            continue
+        if residual:
+            tabs = adc_tables(qmat[qpos] - centroids[pid][None, :], cb)
         else:
-            ids = np.concatenate([ids, add_ids])
-            x = np.concatenate([x, add_mat], axis=0)
-    if len(ids) == 0:  # fully tombstoned, nothing added
-        return []
-    # FLAT stores raw vectors (no normalize-on-write); cosine is computed
-    # directly by the kernel formula, queries NOT pre-normalized;
-    # inner_product scores merge negated (best-first) and un-negate at
-    # finalize — the DataFrame path's (distance desc, id asc) ordering
-    dm = _pairwise_distances(qmat, x, metric)
-    keep = min(k, dm.shape[1])
-    out: dict[int, list[tuple[float, int]]] = {}
-    for qi in range(len(qids)):
-        idx = np.lexsort((ids, dm[qi]))[:keep]
-        out[qi] = [(float(dm[qi, j]), int(ids[j])) for j in idx]
-    return _finalize(
-        qids, out, k, sqrt=metric == "l2", negate=metric == "inner_product"
+            tabs = tables[qpos]
+        rows, out_i, out_d = topk_rows(adc_distances(tabs, codes), ids, coarse_k)
+        coarse.append((qpos[rows], out_i, out_d))
+        coarse_pid.append(np.full(len(rows), pid))
+
+    parts = coarse
+    if k_factor > 1.0 and coarse:
+        # exact re-rank: the coarse_k best per query, re-scored from the
+        # ORIGINAL vectors of just the partitions those candidates live in
+        c_rows, c_ids, c_d = (np.concatenate(col) for col in zip(*coarse))
+        rows, ids, _d, _r = topk_merge(c_rows, c_ids, c_d, coarse_k)
+        needed = np.unique(np.concatenate(coarse_pid)[np.isin(c_ids, ids)])
+        base = posixpath.join(uri, "base", f"ts={ts}")
+        vec_ids, vecs = zip(
+            *(
+                _read_vectors(
+                    posixpath.join(base, f"partition_id={pid}"),
+                    vector_dtype,
+                    allowed=ids,
+                )
+                for pid in needed
+            )
+        )
+        vec_ids = np.concatenate(vec_ids)
+        order = np.argsort(vec_ids, kind="stable")
+        x = np.concatenate(vecs)[order[np.searchsorted(vec_ids[order], ids)]]
+        parts = [(rows, ids, paired_sum_of_squares(qmat[rows], x))]
+
+    # the bridge set is scored exactly in the tables' sos space
+    return parts + _overlay_parts(
+        uri, "pq_overlay", ts, vector_dtype, qmat, k,
+        DistanceMetric.SUM_OF_SQUARES, tomb, allowed,
     )
 
 
-def _search_vamana_files(
-    uri: str,
-    ts: int,
-    metric: str,
-    vector_dtype: str,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    k: int,
-    nprobe: int,
-    upd: tuple[np.ndarray, np.ndarray, np.ndarray | None],
-    l_search: int | None = None,
-) -> list[tuple[int, int, float, int]]:
-    """Sharded Vamana graph walks over the on-disk index — no SparkSession.
+def _vamana_parts(uri, ts, vector_dtype, qmat, k, nprobe, tomb, l_search):
+    """Sharded Vamana graph walks over the on-disk index.
 
-    Routes each query to its nprobe nearest shards, walks each shard's
-    graph from its medoid (``ml.vamana.search_vamana_graph`` — the same
-    kernel the DataFrame path runs), walks the cross-shard overlay
-    pseudo-shard when present, and merges with the (distance, id)
-    tie-break.  Per-task IO = probed shard directories only.
+    Routes each query to its nprobe nearest shards and walks each one
+    with ``indexes.vamana._walk_shard`` — the per-shard body of both
+    DataFrame strategies — plus the cross-shard overlay pseudo-shard
+    (an exact scan) when present.  Per-task IO = probed shard
+    directories only.
 
     Updates mirror ``VamanaIndex.query``'s lazy-delete contract:
     tombstoned nodes stay in the graph as WAYPOINTS (removing them would
     cut connectivity), each shard over-walks by its tombstone overlap,
-    tombstones are dropped from the walk RESULTS, and additions are
-    brute-force-scored into the merge.
+    and tombstones are dropped from the walk RESULTS.
     """
-    from tiledb_vector_search_spark.ml.vamana import (
-        adjacency_from_ids,
-        medoid_position,
-        search_vamana_graph,
+    from tiledb_vector_search_spark.indexes.vamana import (
+        OVERLAY_PID,
+        _walk_shard,
     )
 
-    if metric == "cosine":
-        # stored vectors are pre-normalized (normalize_on_write); mirror
-        # the DataFrame path's query normalization, walk in sos space and
-        # halve at finalize (unit vectors: cosine distance = sos/2)
-        qmat = _normalize_queries_f32(qmat)
-    centroids = _load_centroids(uri, ts)
-    med_tb = _read_parquet_dir(posixpath.join(uri, "aux", "vamana_medoids", f"ts={ts}"))
-    medoids = {
-        int(p): int(m)
-        for p, m in zip(
+    med_tb = _read_parquet_dir(
+        posixpath.join(uri, "aux", "vamana_medoids", f"ts={ts}")
+    )
+    medoids = dict(
+        zip(
             med_tb.column("partition_id").to_pylist(),
             med_tb.column("medoid_id").to_pylist(),
         )
-    }
-    base = posixpath.join(uri, "base", f"ts={ts}")
-    part_queries = _route_files(qmat, centroids, nprobe)
-    overlay_dir = posixpath.join(uri, "aux", "vamana_overlay", f"ts={ts}")
+    )
     if l_search is None:
         l_search = max(2 * k, 50)  # VamanaIndex.query default
-
-    out: dict[int, list[tuple[float, int]]] = {qi: [] for qi in range(len(qids))}
-
-    tomb, add_ids, add_mat = upd
-    tomb_set = set(tomb.tolist())
-
-    def walk_group(tb, pid: int, qlist: list[int]) -> None:
-        ids = tb.column("external_id").to_numpy()
-        x = _decode_vector_column(tb, vector_dtype, len(ids))
-        # over-walk past this group's tombstones so k survivors remain
-        # after the result-side filter (the DataFrame path's eff_k; the
-        # kernel widens the beam to max(l_search, eff_k) itself, and the
-        # first k SURVIVORS are invariant to any eff_k ≥ k + overlap)
-        n_tomb = int(np.isin(ids, tomb).sum()) if tomb_set else 0
-        eff_k = k + n_tomb
-        if pid == -1:
-            # overlay pseudo-shard: EXACT scan of the capped bridge set —
-            # mirrors the DataFrame kernel (the overlay stores no graph
-            # since r6; an old overlay's graph columns are ignored).
-            # _pairwise_distances clamps at 0 — the raw BLAS identity can
-            # emit ~-1e-16 for exact matches, which np.sqrt turns to NaN
-            # under L2
-            d = _pairwise_distances(
-                qmat[qlist].astype(np.float64),
-                x.astype(np.float64),
-                "sum_of_squares",
-            )
-            take = min(eff_k, len(ids))
-            for r_i, qi in enumerate(qlist):
-                top = np.argpartition(d[r_i], take - 1)[:take]
-                out[qi].extend(
-                    (float(d[r_i][p]), int(ids[p]))
-                    for p in top
-                    if int(ids[p]) not in tomb_set
-                )
-            return
-        adj, deg = adjacency_from_ids(
-            ids, tb.column("neighbors").to_numpy(zero_copy_only=False)
-        )
-        vi, vd = search_vamana_graph(
-            x, adj, deg, medoid_position(ids, medoids.get(pid)),
-            qmat[qlist], eff_k, l_search,
-        )
-        for qi, row_i, row_d in zip(qlist, vi, vd):
-            out[qi].extend(
-                (float(d), int(ids[p]))
-                for p, d in zip(row_i, row_d)
-                if p >= 0 and int(ids[p]) not in tomb_set
-            )
-
-    for pid, qlist in sorted(part_queries.items()):
-        pdir = posixpath.join(base, f"partition_id={pid}")
-        if not _is_dir(pdir):
-            continue
-        walk_group(
-            _read_parquet_dir(pdir, columns=["external_id", "vector", "neighbors"]),
-            pid,
-            qlist,
-        )
+    shards = list(_probes(uri, ts, qmat, _load_centroids(uri, ts), nprobe))
+    overlay_dir = posixpath.join(uri, "aux", "vamana_overlay", f"ts={ts}")
     if _is_dir(overlay_dir):
-        # the bridge graph is probed by EVERY query (pseudo-shard -1)
-        walk_group(
-            _read_parquet_dir(
-                overlay_dir, columns=["external_id", "vector", "neighbors"]
-            ),
-            -1,
-            list(range(len(qids))),
+        # the bridge set is probed by EVERY query
+        shards.append((OVERLAY_PID, overlay_dir, np.arange(len(qmat))))
+    parts = []
+    for pid, pdir, qpos in shards:
+        tb = _read_parquet_dir(
+            pdir, columns=["external_id", "vector", "neighbors"]
         )
-        # a vector can surface from both its shard and the overlay
-        for qi in out:
-            best: dict[int, float] = {}
-            for d, eid in out[qi]:
-                if eid not in best or d < best[eid]:
-                    best[eid] = d
-            out[qi] = [(d, eid) for eid, d in best.items()]
-    # additions merge in the walk's sos space (finalize halves for cosine
-    # — stored additions are pre-normalized, so sos/2 = cosine distance)
-    _extend_with_additions(out, qmat, add_ids, add_mat, k, "sum_of_squares")
-    return _finalize(
-        qids, out, k, sqrt=metric == "l2", halve=metric == "cosine"
-    )
+        ids = tb.column("external_id").to_numpy()
+        walked = _walk_shard(
+            pid,
+            ids,
+            decode_matrix(tb.column("vector").to_pylist(), vector_dtype),
+            tb.column("neighbors").to_numpy(zero_copy_only=False),
+            medoids.get(pid),
+            qpos,
+            qmat[qpos],
+            # over-walk past this shard's tombstones so k survivors remain
+            # after the result-side filter (the DataFrame path's eff_k)
+            k + int(np.isin(ids, tomb).sum()),
+            l_search,
+        )
+        live = ~np.isin(walked[ID_COL], tomb)
+        parts.append(
+            tuple(
+                walked.loc[live, col].to_numpy()
+                for col in (QUERY_ID_COL, ID_COL, DISTANCE_COL)
+            )
+        )
+    return parts
 
 
 class AnnSearchUDTF:
@@ -986,8 +760,8 @@ class AnnSearchUDTF:
 
     ``eval`` receives one query row plus the constant (uri, k, nprobe
     [, k_factor]) arguments; ``terminate`` runs one batched file-pruned
-    IVF/IVF_PQ search so the per-partition IO amortizes over every query
-    in the task.
+    search (FLAT, IVF_FLAT, IVF_PQ or VAMANA) so the per-partition IO
+    amortizes over every query in the task.
     """
 
     def __init__(self):

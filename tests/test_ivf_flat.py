@@ -276,18 +276,30 @@ def test_partition_pruning_in_plan(spark, ivf_uri, queries):
 
 
 def test_join_strategy_matches_kernel(spark, ivf_uri, queries):
-    """The fully distributed large-nq plan (routing by broadcast join, no
-    driver collect) must return the same results as the kernel path."""
+    """The fully distributed large-nq plan (executor routing + cogroup, no
+    driver collect) must return the kernel path's rows, distances
+    included, bit for bit: both score each cell with the same scorer."""
     idx = open_index(spark, ivf_uri)
     a = {
-        (r.query_id, r.rank, r.external_id)
+        (r.query_id, r.rank, r.external_id, r.distance)
         for r in idx.query(queries, 5, nprobe=4, strategy="kernel").collect()
     }
     b = {
-        (r.query_id, r.rank, r.external_id)
+        (r.query_id, r.rank, r.external_id, r.distance)
         for r in idx.query(queries, 5, nprobe=4, strategy="join").collect()
     }
     assert a == b
+
+
+def test_join_strategy_plan_is_cogroup(spark, ivf_uri, queries):
+    """The join plan reaches the cells through a cogroup of executor-routed
+    queries: no broadcast nested-loop routing join and no per-pair
+    distance expression over base ⋈ routing ⋈ queries."""
+    idx = open_index(spark, ivf_uri)
+    plan = idx.query(queries, 5, nprobe=4, strategy="join")._jdf.queryExecution(
+    ).executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_memory_budget_blocked_query(spark, ivf_uri, queries):
@@ -434,9 +446,15 @@ def test_overlay_lifts_cheap_probe_recall(
 
 
 def test_overlay_join_strategy_agrees(spark, ivf_overlay_idx, queries):
-    a = _got(ivf_overlay_idx.query(queries, K, nprobe=2, strategy="kernel"))
-    b = _got(ivf_overlay_idx.query(queries, K, nprobe=2, strategy="join"))
-    assert a == b
+    def rows(strategy):
+        return sorted(
+            (r.query_id, r.rank, r.external_id, r.distance)
+            for r in ivf_overlay_idx.query(
+                queries, K, nprobe=2, strategy=strategy
+            ).collect()
+        )
+
+    assert rows("kernel") == rows("join")
 
 
 def test_overlay_lifecycle_delete_and_consolidate(

@@ -264,21 +264,22 @@ def test_encode_kernels_agree(spark):
 
 
 def test_join_strategy_matches_kernel(spark, source, pq_index):
-    """The fully distributed large-nq ADC plan (routing join + broadcast
-    codebooks, no driver collect of queries) must rank identically to the
-    driver-table kernel path, both at k_factor=1 and with exact re-rank."""
+    """The fully distributed large-nq ADC plan (executor routing + cogroup,
+    no driver collect of queries) must return the kernel path's rows,
+    distances included, bit for bit — both at k_factor=1 and with exact
+    re-rank: both score each cell with the same ADC scorer."""
     queries = source.where("external_id < 30").select(
         F.col("external_id").alias("query_id"), "vector"
     )
     for kf in (1.0, 3.0):
         a = {
-            (r.query_id, r.rank, r.external_id)
+            (r.query_id, r.rank, r.external_id, r.distance)
             for r in pq_index.query(
                 queries, 5, nprobe=4, k_factor=kf, strategy="kernel"
             ).collect()
         }
         b = {
-            (r.query_id, r.rank, r.external_id)
+            (r.query_id, r.rank, r.external_id, r.distance)
             for r in pq_index.query(
                 queries, 5, nprobe=4, k_factor=kf, strategy="join"
             ).collect()
@@ -294,7 +295,7 @@ def test_join_strategy_plan_has_no_driver_queries(spark, source, pq_index):
     )
     df = pq_index.query(queries, 5, nprobe=4, strategy="join")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the kernel path ships per-query ADC tables via a broadcast python
+    # the kernel path ships the collected queries via a broadcast python
     # variable and its plan carries no query-side join; the join path must
     # show the query scan joined in
     assert "MapInPandas" in plan or "FlatMapCoGroupsInPandas" in plan, plan
@@ -428,7 +429,7 @@ def test_pq_overlay_lifts_cheap_probe_recall(
 def test_pq_overlay_join_strategy_agrees(spark, pq_overlay_idx, ov_queries):
     def key(df):
         return sorted(
-            (r.query_id, r.external_id, round(r.distance, 6))
+            (r.query_id, r.rank, r.external_id, r.distance)
             for r in df.collect()
         )
     a = key(pq_overlay_idx.query(ov_queries, 10, nprobe=2, strategy="kernel"))

@@ -311,17 +311,18 @@ def test_unsupported_metric(spark, source, tmp_path):
 
 
 def test_join_strategy_matches_kernel(spark, source, vam_index):
-    """The distributed cogroup walk (routing join, shard ⨝ routed queries)
-    must return the same ranked results as the driver-broadcast path."""
+    """The distributed cogroup walk (executor routing, shard ⨝ routed
+    queries) must return the driver-broadcast path's rows, distances
+    included, bit for bit."""
     queries = source.where("external_id < 30").select(
         F.col("external_id").alias("query_id"), "vector"
     )
     a = {
-        (r.query_id, r.rank, r.external_id)
+        (r.query_id, r.rank, r.external_id, r.distance)
         for r in vam_index.query(queries, 5, nprobe=3, strategy="kernel").collect()
     }
     b = {
-        (r.query_id, r.rank, r.external_id)
+        (r.query_id, r.rank, r.external_id, r.distance)
         for r in vam_index.query(queries, 5, nprobe=3, strategy="join").collect()
     }
     assert a == b
@@ -369,11 +370,11 @@ def test_overlay_lifts_boundary_recall(spark, source, tmp_path):
     assert r_ov > r_plain, (r_ov, r_plain)
     assert _recall(ov, source, queries, exact, nprobe=4) >= MIN_RECALL
     a = {
-        (r.query_id, r.rank, r.external_id)
+        (r.query_id, r.rank, r.external_id, r.distance)
         for r in ov.query(queries, 5, nprobe=2, strategy="kernel").collect()
     }
     b = {
-        (r.query_id, r.rank, r.external_id)
+        (r.query_id, r.rank, r.external_id, r.distance)
         for r in ov.query(queries, 5, nprobe=2, strategy="join").collect()
     }
     assert a == b

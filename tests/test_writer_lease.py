@@ -707,3 +707,82 @@ def test_adopted_lease_widens_for_long_mutations(spark, docs, tmp_path):
         idx.consolidate()
         assert lease.ttl_ms == DEFAULT_LEASE_TTL_MS
         assert json.loads(fs.read_text(lock))["ttl_ms"] == DEFAULT_LEASE_TTL_MS
+
+
+# -- typed errors: only the named races read as False ------------------------
+
+
+class _JavaClass:
+    def __init__(self, name: str):
+        self._name = name
+
+    def getName(self) -> str:
+        return self._name
+
+
+class _JavaThrowable:
+    def __init__(self, name: str):
+        self._cls = _JavaClass(name)
+
+    def getClass(self) -> _JavaClass:
+        return self._cls
+
+    def getCause(self):
+        return None
+
+
+class _FakePy4JError(Exception):
+    """A py4j-style error: ``java_exception`` names the Java class."""
+
+    def __init__(self, name: str):
+        super().__init__(name)
+        self.java_exception = _JavaThrowable(name)
+
+
+class _RaisingFileSystem:
+    """Stand-in Hadoop FileSystem whose rename/create raise ``name``."""
+
+    def __init__(self, name: str):
+        self._name = name
+
+    def rename(self, src, dst):
+        raise _FakePy4JError(self._name)
+
+    def create(self, path, overwrite):
+        raise _FakePy4JError(self._name)
+
+
+def test_rename_if_exists_missing_source_is_false(spark, tmp_path):
+    fs = HadoopFS(spark, str(tmp_path))
+    src, dst = str(tmp_path / "gone"), str(tmp_path / "aside")
+    assert not fs.rename_if_exists(src, dst)
+    fs.write_text_atomic(src, "x")
+    assert fs.rename_if_exists(src, dst)
+    assert fs.read_text(dst) == "x"
+
+
+@pytest.mark.parametrize(
+    "name, lost",
+    [
+        ("java.io.FileNotFoundException", "rename"),
+        ("org.apache.hadoop.fs.FileAlreadyExistsException", "create"),
+        ("org.apache.hadoop.security.AccessControlException", None),
+        ("java.io.IOException", None),
+    ],
+)
+def test_lease_primitives_raise_unclassified_errors(spark, tmp_path, name, lost):
+    """A permission or I/O error is not "lost the race" / "exists": only
+    the source-gone rename and the already-exists create read as False."""
+    fs = HadoopFS(spark, str(tmp_path))
+    fs._fs = _RaisingFileSystem(name)
+    p = fs._p(str(tmp_path / "lock"))
+    if lost == "rename":
+        assert fs.rename_if_exists(str(tmp_path / "a"), str(tmp_path / "b")) is False
+    else:
+        with pytest.raises(_FakePy4JError):
+            fs.rename_if_exists(str(tmp_path / "a"), str(tmp_path / "b"))
+    if lost == "create":
+        assert fs._create_exclusive_fallback(p, "mine") is False
+    else:
+        with pytest.raises(_FakePy4JError):
+            fs._create_exclusive_fallback(p, "mine")

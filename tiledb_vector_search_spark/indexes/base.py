@@ -20,6 +20,8 @@ from __future__ import annotations
 import os
 from typing import Any
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,9 +29,17 @@ from tiledb_vector_search_spark.functions.distance import (
     DistanceMetric,
     normalize_expr,
 )
+from tiledb_vector_search_spark.operators import knn as _knn
+from tiledb_vector_search_spark.operators.routing import (
+    queries_by_partition,
+    routing_table_join,
+)
+from tiledb_vector_search_spark.operators.topk import pad_to_k, topk_window
 from tiledb_vector_search_spark.schemas import (
+    DISTANCE_COL,
     ID_COL,
     PARTITION_COL,
+    QUERY_ID_COL,
     VECTOR_COL,
     integral_id_col,
 )
@@ -676,6 +686,124 @@ class Index:
             excluded_ids=excluded_ids,
         )
 
+    # -- probe-routed plans (IVF_FLAT, IVF_PQ, VAMANA) --------------------------
+    #
+    # Each query is routed to its nprobe nearest cells; each cell scores the
+    # queries routed to it with the index's one per-cell scorer and keeps a
+    # partial top-k; one tail merges the partials.  The ``kernel`` and
+    # ``join`` strategies differ only in how queries reach the cells:
+    # ``kernel`` collects the batch, routes it on the driver and broadcasts
+    # the route map into the pruned scan (``probe_scan``); ``join`` routes
+    # on the executors and cogroups the routed queries with the cells on
+    # partition_id (``probe_cogroup``).
+
+    def _collect_queries(
+        self,
+        q: DataFrame,
+        queries: DataFrame,
+        strategy: str,
+        driver_strategies: tuple = ("kernel",),
+    ) -> "list | None":
+        """The collected query rows for a driver-routed plan, or ``None``
+        when the batch takes the ``join`` plan.  ``auto`` collects at most
+        ``knn.KERNEL_MAX_NQ + 1`` rows — one job that doubles as the
+        small-batch fetch — and takes the join plan above the bound, which
+        never collects the batch.  Collected rows are validated on the
+        driver; the join plan runs the distributed data check."""
+        bound = _knn.KERNEL_MAX_NQ
+        if strategy == "auto":
+            q_rows = q.limit(bound + 1).collect()
+            if len(q_rows) > bound:
+                q_rows = None
+        elif strategy == "join":
+            q_rows = None
+        elif strategy in driver_strategies:
+            q_rows = q.collect()
+        else:
+            raise ValueError(f"unknown strategy: {strategy}")
+        if q_rows is None:
+            self._validate_queries(queries)
+        else:
+            self._validate_query_rows(q_rows)
+        return q_rows
+
+    def _route_join(
+        self, q: DataFrame, nprobe: int, every: "int | None" = None
+    ) -> DataFrame:
+        """(partition_id, query_id, vector) rows of the ``join`` plan;
+        ``every`` names a pseudo-cell (the overlay) that every query
+        also probes."""
+        routed = routing_table_join(
+            q, self.centroids(), nprobe, QUERY_ID_COL, VECTOR_COL
+        )
+        if every is not None:
+            routed = routed.unionByName(
+                q.select(
+                    F.lit(every).cast("int").alias(PARTITION_COL),
+                    QUERY_ID_COL,
+                    VECTOR_COL,
+                )
+            )
+        return routed
+
+    def _live_rows(
+        self,
+        rows: DataFrame,
+        allowed_ids: "DataFrame | None" = None,
+        excluded_ids: "DataFrame | None" = None,
+        tombstones: bool = False,
+    ) -> DataFrame:
+        """``rows`` restricted to ``allowed_ids`` and without
+        ``excluded_ids``; ``tombstones`` also drops base ids the updates
+        log supersedes."""
+        if tombstones and self._has_updates():
+            rows = rows.join(
+                F.broadcast(self._updated_ids()), ID_COL, "left_anti"
+            )
+        if allowed_ids is not None:
+            rows = rows.join(allowed_ids, ID_COL, "left_semi")
+        if excluded_ids is not None:
+            rows = rows.join(excluded_ids, ID_COL, "left_anti")
+        return rows
+
+    def _merge_topk(
+        self,
+        scored: DataFrame,
+        q: DataFrame,
+        queries: DataFrame,
+        k: int,
+        pad: bool,
+        allowed_ids: "DataFrame | None" = None,
+        excluded_ids: "DataFrame | None" = None,
+        extra: "DataFrame | None" = None,
+        dedup: bool = False,
+    ) -> DataFrame:
+        """The result tail of every probe-routed query.  The pending
+        additions, scored exactly under the same id filters, and
+        ``extra`` (a second scored branch) join the partial top-k's in the
+        index metric's distance space.  With ``dedup`` each (query, id)
+        keeps its minimum distance: an overlay member can be scored in its
+        home cell and again in the overlay.  Then the global (distance,
+        id) top-k, padded to ``k`` rows when asked."""
+        if self._has_updates():
+            additions = self._live_rows(
+                self._additions(), allowed_ids, excluded_ids
+            )
+            scored = scored.unionByName(
+                _knn.knn_bruteforce_expr(additions, q, k, self.metric).drop(
+                    "rank"
+                )
+            )
+        if extra is not None:
+            scored = scored.unionByName(extra)
+        if dedup:
+            scored = scored.groupBy(QUERY_ID_COL, ID_COL).agg(
+                F.min(DISTANCE_COL).alias(DISTANCE_COL)
+            )
+        order = [F.col(DISTANCE_COL).asc(), F.col(ID_COL).asc()]
+        res = topk_window(scored, [QUERY_ID_COL], order, k)
+        return pad_to_k(res, queries, k) if pad else res
+
     # -- measured recall curve / auto operating point --------------------------
     #
     # The engine ships three probe-routed index types × overlay ×
@@ -1190,6 +1318,133 @@ class Index:
     @staticmethod
     def delete_index(spark: SparkSession, uri: str) -> None:
         IndexStorage(spark, uri).delete_index()
+
+
+PROBE_SCHEMA = f"{QUERY_ID_COL} long, {ID_COL} long, {DISTANCE_COL} double"
+
+
+def _no_scores() -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            QUERY_ID_COL: np.empty(0, dtype=np.int64),
+            ID_COL: np.empty(0, dtype=np.int64),
+            DISTANCE_COL: np.empty(0, dtype=np.float64),
+        }
+    )
+
+
+def _cell_topk(score, pid, cell, qids, qmat, bound) -> pd.DataFrame:
+    """One cell's partial top-k from ``score(pid, cell, qids, qmat)``.
+
+    The scorer sees the cell's rows in id order and the routed queries in
+    id order, at most ``bound`` queries per call.  A BLAS product's value
+    for a pair depends on where the pair sits in the product, so this
+    fixed layout is what makes every plan that scores the same cell for
+    the same queries return the same bits."""
+    ids = cell[ID_COL].to_numpy()
+    if len(ids) > 1 and (ids[1:] < ids[:-1]).any():
+        cell = cell.iloc[np.argsort(ids, kind="stable")].reset_index(drop=True)
+    order = np.argsort(qids, kind="stable")
+    parts = [
+        score(pid, cell, qids[b], qmat[b])
+        for b in (order[i : i + bound] for i in range(0, len(order), bound))
+    ]
+    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+
+
+def probe_scan(
+    cells: DataFrame,
+    score,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    pairs: list,
+    scan_tasks: "int | None" = None,
+    whole_cells: bool = False,
+) -> DataFrame:
+    """The ``kernel`` plan's per-cell partial top-k's: the driver-routed
+    (query_id, partition_id) ``pairs`` and the query matrix are
+    broadcast into a scan of the probed cells (the reference's
+    ``apply_query``, ``detail/ivf/qv.h:880-1040``).
+
+    Each scan task gathers its rows by cell and scores each cell once,
+    so the shuffle carries O(cells · routed queries · k) rows.  A cell
+    is one file of the snapshot layout (``cell_write_layout``), hence
+    read whole by one task; a cell that older layouts split over tasks
+    still merges exactly, one partial top-k per piece.  ``whole_cells``
+    guarantees whole cells with a shuffle on partition_id (a graph walk
+    needs the whole shard).  ``scan_tasks`` coalesces the scan to a
+    byte-derived task count (``Index._kernel_scan_tasks``)."""
+    qpos = {int(qid): i for i, qid in enumerate(qids)}
+    route = {
+        pid: np.array([qpos[qid] for qid in routed], dtype=np.int64)
+        for pid, routed in queries_by_partition(pairs).items()
+    }
+    bc = cells.sparkSession.sparkContext.broadcast((qids, qmat, route))
+    bound = _knn.KERNEL_MAX_NQ
+
+    def cell_topk(pid, cell):
+        qids_l, qmat_l, route_l = bc.value
+        pos = route_l[pid]
+        return _cell_topk(score, pid, cell, qids_l[pos], qmat_l[pos], bound)
+
+    if whole_cells:
+
+        def per_cell(pdf):
+            pid = int(pdf[PARTITION_COL].iloc[0]) if len(pdf) else None
+            if pid not in bc.value[2]:
+                return _no_scores()
+            return cell_topk(pid, pdf)
+
+        return cells.groupBy(PARTITION_COL).applyInPandas(
+            per_cell, PROBE_SCHEMA
+        )
+
+    def per_task(batches):
+        route_l = bc.value[2]
+        chunks: dict = {}
+        for pdf in batches:
+            for pid, grp in pdf.groupby(PARTITION_COL, sort=False):
+                if int(pid) in route_l:
+                    chunks.setdefault(int(pid), []).append(grp)
+        for pid in sorted(chunks):
+            parts = chunks.pop(pid)
+            yield cell_topk(
+                pid,
+                parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True),
+            )
+
+    if scan_tasks is not None:
+        cells = cells.coalesce(scan_tasks)
+    return cells.mapInPandas(per_task, PROBE_SCHEMA)
+
+
+def probe_cogroup(cells: DataFrame, routed: DataFrame, score) -> DataFrame:
+    """The ``join`` plan's per-cell partial top-k's: ``cells`` cogrouped
+    with the ``routed`` (partition_id, query_id, vector) rows on
+    partition_id, each group scored by the same ``score`` the kernel plan
+    runs.  Nothing is collected on the driver; a cell with more routed
+    queries than ``knn.KERNEL_MAX_NQ`` (the overlay pseudo-cell at bulk
+    nq) is scored in blocks of that many, so each distance matrix stays
+    as small as on the kernel plan."""
+    bound = _knn.KERNEL_MAX_NQ
+
+    def per_cell(cell, q):
+        if len(cell) == 0 or len(q) == 0:
+            return _no_scores()
+        return _cell_topk(
+            score,
+            int(cell[PARTITION_COL].iloc[0]),
+            cell,
+            q[QUERY_ID_COL].to_numpy(dtype=np.int64),
+            np.array(list(q[VECTOR_COL]), dtype=np.float64),
+            bound,
+        )
+
+    return (
+        cells.groupBy(PARTITION_COL)
+        .cogroup(routed.groupBy(PARTITION_COL))
+        .applyInPandas(per_cell, PROBE_SCHEMA)
+    )
 
 
 def cell_write_layout(df: DataFrame) -> DataFrame:

@@ -45,6 +45,8 @@ from tiledb_vector_search_spark.indexes.base import (
     Index,
     cell_write_layout,
     count_and_dims,
+    probe_cogroup,
+    probe_scan,
 )
 from tiledb_vector_search_spark.ml.kmeans import (
     CENTRALIZED_K_MAX,
@@ -54,15 +56,8 @@ from tiledb_vector_search_spark.ml.kmeans import (
     kmeans_numpy,
     train_centroids_ml,
 )
-from tiledb_vector_search_spark.operators.knn import (
-    block_topk,
-    knn_bruteforce_expr,
-    topk_rows,
-)
-from tiledb_vector_search_spark.operators.routing import (
-    queries_by_partition,
-    route_queries,
-)
+from tiledb_vector_search_spark.operators.knn import block_topk, topk_rows
+from tiledb_vector_search_spark.operators.routing import route_queries
 from tiledb_vector_search_spark.operators.topk import topk_window
 from tiledb_vector_search_spark.schemas import (
     DISTANCE_COL,
@@ -235,6 +230,20 @@ def adc_distances(tables: np.ndarray, codes: np.ndarray) -> np.ndarray:
     for qi in range(tables.shape[0]):
         out[qi] = tables[qi][pick, codes].sum(axis=1)
     return out
+
+
+def adc_topk(
+    qmat: np.ndarray,
+    codebooks: np.ndarray,
+    codes: np.ndarray,
+    ids: np.ndarray,
+    k: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Partial top-``k`` of ``n`` code rows under each query's ADC tables:
+    (query row position, id, approximate squared distance) flat arrays in
+    the (distance, id) order.  The per-cell scan of every IVF_PQ query
+    plan; residual indexes pass (q − centroid[pid]) as ``qmat``."""
+    return topk_rows(adc_distances(adc_tables(qmat, codebooks), codes), ids, k)
 
 
 def default_num_subspaces(dims: int) -> int:
@@ -1025,11 +1034,6 @@ class IVFPQIndex(Index):
 
     # -- query ----------------------------------------------------------------
 
-    # query batches beyond this route via a distributed join instead of a
-    # driver collect (same contract as IVFFlatIndex.LARGE_NQ): bulk
-    # dataset-vs-dataset search must not materialize queries on the driver
-    LARGE_NQ = 4096
-
     def query(
         self,
         queries: DataFrame,
@@ -1064,11 +1068,14 @@ class IVFPQIndex(Index):
         reference; ``k_factor>1`` fetches ``k_factor·k`` coarse candidates
         and re-scores them exactly against the original vectors.
 
-        Strategies: ``kernel`` (driver-built ADC tables broadcast to a
-        mapInPandas scan — small query batches), ``join`` (fully
-        distributed: routing and ADC scoring keyed by joins, no driver
-        collect — large batches), ``auto`` (kernel below LARGE_NQ, join
-        above).
+        Strategies: ``kernel`` routes the collected batch on the driver
+        and broadcasts it into the pruned code scan; ``join`` routes on
+        the executors and cogroups the routed queries with the cells, with
+        no driver collect (bulk dataset-vs-dataset search); ``auto`` is
+        kernel up to ``operators.knn.KERNEL_MAX_NQ`` queries and join
+        above.  Both score each cell with the same ADC scorer
+        (``_cell_scorer``) and share the re-rank and merge, so they return
+        the same bits.
         """
         if not self.query_base_array:
             # updates-only range open: no base, no codes to ADC-scan —
@@ -1093,73 +1100,58 @@ class IVFPQIndex(Index):
         metric = self.metric
         coarse_k = max(k, int(math.ceil(k * k_factor)))
 
-        q = queries.select(QUERY_ID_COL, VECTOR_COL)
-        if strategy == "auto":
-            # one job: the bounded collect doubles as the small-batch fetch
-            q_rows = q.limit(self.LARGE_NQ + 1).collect()
-            if len(q_rows) > self.LARGE_NQ:
-                self._validate_queries(queries)  # distributed data check
-                return self._query_join(
-                    q, k, nprobe, k_factor, pad, queries, allowed_ids,
-                    excluded_ids,
-                )
-        elif strategy == "join":
-            self._validate_queries(queries)
-            return self._query_join(
-                q, k, nprobe, k_factor, pad, queries, allowed_ids,
-                excluded_ids,
-            )
-        elif strategy == "kernel":
-            q_rows = q.collect()
-        else:
-            raise ValueError(f"unknown strategy: {strategy}")
-        self._validate_query_rows(q_rows)
-        qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
-
-        # routing is a driver-side numpy task (centroids ≤10k) — no Spark
-        # round-trip
-        pairs = route_queries(qids, qmat, self.centroids(), nprobe)
-        parts = sorted({p for _, p in pairs})
-        base = self._base_vectors().where(F.col(PARTITION_COL).isin(parts))
-        if self._has_updates():
-            base = base.join(F.broadcast(self._updated_ids()), ID_COL, "left_anti")
         if allowed_ids is not None:
             allowed_ids = allowed_ids.select(
                 integral_id_col(
                     allowed_ids, ID_COL, "IVFPQIndex.query allowed_ids"
                 ).alias(ID_COL)
             )
-            base = base.join(allowed_ids, ID_COL, "left_semi")
         if excluded_ids is not None:
             excluded_ids = excluded_ids.select(
                 integral_id_col(
                     excluded_ids, ID_COL, "IVFPQIndex.query excluded_ids"
                 ).alias(ID_COL)
             )
-            base = base.join(excluded_ids, ID_COL, "left_anti")
 
-        coarse = self._adc_scores(
-            base, qids, qmat, pairs, coarse_k,
-            scan_tasks=self._kernel_scan_tasks(parts, len(qids)),
-        )
+        q = queries.select(QUERY_ID_COL, VECTOR_COL)
+        q_rows = self._collect_queries(q, queries, strategy)
+        if q_rows is None:
+            base = self._live_rows(
+                self._base_vectors(), allowed_ids, excluded_ids, tombstones=True
+            )
+            coarse = self._query_join(q, base, nprobe, coarse_k)
+        else:
+            qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+            qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
+            # routing is a driver-side numpy task (centroids ≤10k) — no
+            # Spark round-trip
+            pairs = route_queries(qids, qmat, self.centroids(), nprobe)
+            parts = sorted({p for _, p in pairs})
+            base = self._live_rows(
+                self._base_vectors().where(F.col(PARTITION_COL).isin(parts)),
+                allowed_ids, excluded_ids, tombstones=True,
+            )
+            coarse = self._adc_scores(
+                base, qids, qmat, pairs, coarse_k,
+                scan_tasks=self._kernel_scan_tasks(parts, len(qids)),
+            )
         order = [F.col(DISTANCE_COL).asc(), F.col(ID_COL).asc()]
-        coarse_topk = topk_window(coarse, [QUERY_ID_COL], order, coarse_k).drop(
+        result = topk_window(coarse, [QUERY_ID_COL], order, coarse_k).drop(
             "rank"
         )
-
         if k_factor > 1.0:
-            # exact re-rank join: candidates are tiny (nq·k·k_factor) —
-            # broadcast them against the vector column of the pruned scan
-            cand = coarse_topk.select(QUERY_ID_COL, ID_COL)
-            # candidates all come from probed partitions, so the re-rank
-            # scan reuses the partition-pruned, tombstone-filtered ``base``
-            # rather than re-scanning the full table
-            vecs = self._float_vectors(base).select(ID_COL, VECTOR_COL)
+            # exact re-rank of the coarse candidates: they all come from
+            # probed partitions, so the re-rank reuses the pruned,
+            # tombstone-filtered ``base``.  A collected batch's candidate
+            # set is tiny (nq·k·k_factor) and broadcasts; at bulk nq it is
+            # unbounded, so the join plan leaves the sizing to AQE
+            small = F.broadcast if q_rows is not None else (lambda df: df)
             qv = q.select(QUERY_ID_COL, F.col(VECTOR_COL).alias("__qvec"))
-            reranked = (
-                vecs.join(F.broadcast(cand), ID_COL)
-                .join(F.broadcast(qv), QUERY_ID_COL)
+            result = (
+                self._float_vectors(base)
+                .select(ID_COL, VECTOR_COL)
+                .join(small(result.select(QUERY_ID_COL, ID_COL)), ID_COL)
+                .join(small(qv), QUERY_ID_COL)
                 .select(
                     QUERY_ID_COL,
                     ID_COL,
@@ -1168,197 +1160,32 @@ class IVFPQIndex(Index):
                     ),
                 )
             )
-            result = reranked
-        else:
-            if metric is DistanceMetric.L2:
-                coarse_topk = coarse_topk.withColumn(
-                    DISTANCE_COL, F.sqrt(F.col(DISTANCE_COL))
-                )
-            result = coarse_topk
+        elif metric is DistanceMetric.L2:
+            result = result.withColumn(DISTANCE_COL, F.sqrt(F.col(DISTANCE_COL)))
 
-        if self._has_updates():
-            additions = self._additions()
-            if allowed_ids is not None:
-                additions = additions.join(allowed_ids, ID_COL, "left_semi")
-            if excluded_ids is not None:
-                additions = additions.join(excluded_ids, ID_COL, "left_anti")
-            add_scored = knn_bruteforce_expr(additions, q, k, metric).drop("rank")
-            result = result.unionByName(add_scored)
-
+        # an overlay member whose home partition was also probed appears
+        # twice — exact vs ADC (or exact vs exact after a re-rank); the
+        # tail's min() keeps the tighter estimate and dedups
         ov_scored = self._overlay_scored(q, k, metric, allowed_ids, excluded_ids)
-        if ov_scored is not None:
-            # an overlay member whose home partition was also probed
-            # appears twice — exact vs ADC (or exact vs exact after a
-            # re-rank); min() keeps the tighter estimate and dedups
-            result = (
-                result.unionByName(ov_scored)
-                .groupBy(QUERY_ID_COL, ID_COL)
-                .agg(F.min(DISTANCE_COL).alias(DISTANCE_COL))
-            )
-
-        res = topk_window(result, [QUERY_ID_COL], order, k)
-        if pad:
-            from tiledb_vector_search_spark.operators.topk import pad_to_k
-
-            res = pad_to_k(res, queries, k)
-        return res
+        return self._merge_topk(
+            result, q, queries, k, pad, allowed_ids, excluded_ids,
+            extra=ov_scored, dedup=ov_scored is not None,
+        )
 
     def _query_join(
-        self,
-        q: DataFrame,
-        k: int,
-        nprobe: int,
-        k_factor: float,
-        pad: bool,
-        queries: DataFrame,
-        allowed_ids: DataFrame | None = None,
-        excluded_ids: DataFrame | None = None,
+        self, q: DataFrame, cells: DataFrame, nprobe: int, coarse_k: int
     ) -> DataFrame:
-        """Fully distributed ADC query plan: no driver materialization.
-
-        routing = queries ⋈ broadcast(centroids) rank ≤ nprobe (the
-        ``routing_table_join`` shape shared with ``IVFFlatIndex``); coarse =
-        codes ⋈ routing ⋈ queries → per-batch ADC kernel with only the
-        BROADCAST CODEBOOKS (m·256·sub_dim — constant size, unlike the
-        per-query ADC tables the kernel path ships) → partial top-k →
-        window merge; re-rank joins stay un-hinted so AQE sizes them (the
-        candidate set is nq·k·k_factor — unbounded at bulk nq).
-        """
-        import pandas as pd
-
-        from tiledb_vector_search_spark.operators.routing import (
-            routing_table_join,
+        """The ``join`` plan's per-cell partial coarse top-k's: no driver
+        materialization.  Query batches are routed on the executors by the
+        driver plan's own router (``routing_table_join``) and cogrouped
+        with the (filtered) code ``cells`` on partition_id; each cell runs
+        ``_cell_scorer`` on the queries routed to it, as the kernel plan's
+        scan does."""
+        return probe_cogroup(
+            cells.select(PARTITION_COL, ID_COL, CODE_COL),
+            self._route_join(q, nprobe),
+            self._cell_scorer(coarse_k),
         )
-
-        metric = self.metric
-        coarse_k = max(k, int(math.ceil(k * k_factor)))
-        routing = routing_table_join(
-            q, self.centroids(), nprobe, QUERY_ID_COL, VECTOR_COL
-        )
-        base = self._base_vectors()
-        if self._has_updates():
-            base = base.join(F.broadcast(self._updated_ids()), ID_COL, "left_anti")
-        if allowed_ids is not None:
-            allowed_ids = allowed_ids.select(
-                integral_id_col(
-                    allowed_ids, ID_COL, "IVFPQIndex.query allowed_ids"
-                ).alias(ID_COL)
-            )
-            base = base.join(allowed_ids, ID_COL, "left_semi")
-        if excluded_ids is not None:
-            excluded_ids = excluded_ids.select(
-                integral_id_col(
-                    excluded_ids, ID_COL, "IVFPQIndex.query excluded_ids"
-                ).alias(ID_COL)
-            )
-            base = base.join(excluded_ids, ID_COL, "left_anti")
-
-        bc = self.spark.sparkContext.broadcast(
-            (
-                self.codebooks(),
-                self.centroids() if self.pq_residual else None,
-            )
-        )
-        kk = coarse_k
-
-        joined = (
-            base.select(PARTITION_COL, ID_COL, CODE_COL)
-            .join(routing, PARTITION_COL)
-            .join(
-                q.select(QUERY_ID_COL, F.col(VECTOR_COL).alias("__qvec")),
-                QUERY_ID_COL,
-            )
-        )
-
-        def score(batches):
-            cb, cents = bc.value
-            m, _n_codes, sub_dim = cb.shape
-            arange_m = np.arange(m)
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                ids = pdf[ID_COL].to_numpy(dtype=np.int64)
-                qids = pdf[QUERY_ID_COL].to_numpy(dtype=np.int64)
-                codes = np.frombuffer(
-                    b"".join(pdf[CODE_COL]), dtype=np.uint8
-                ).reshape(n, m)
-                qv = np.array(list(pdf["__qvec"]), dtype=np.float64)
-                if cents is not None:
-                    # residual codes: the ADC target is (q − centroid[pid])
-                    pids = pdf[PARTITION_COL].to_numpy(dtype=np.int64)
-                    qv = qv - cents[pids]
-                qv = qv.reshape(n, m, sub_dim)
-                # direct per-row gather — no per-query table build, so cost
-                # is n·dims flops regardless of how many distinct queries
-                # land in the batch
-                diff = qv - cb[arange_m[None, :], codes]
-                dist = np.einsum("nms,nms->n", diff, diff)
-                out = pd.DataFrame(
-                    {QUERY_ID_COL: qids, ID_COL: ids, DISTANCE_COL: dist}
-                )
-                # per-batch partial top-k bounds the window-merge shuffle at
-                # O(batches · queries-in-batch · coarse_k)
-                out = out.sort_values(
-                    [QUERY_ID_COL, DISTANCE_COL, ID_COL], kind="mergesort"
-                )
-                yield out.groupby(QUERY_ID_COL, sort=False).head(kk)
-
-        coarse = joined.mapInPandas(
-            score,
-            schema=f"{QUERY_ID_COL} long, {ID_COL} long, {DISTANCE_COL} double",
-        )
-        order = [F.col(DISTANCE_COL).asc(), F.col(ID_COL).asc()]
-        coarse_topk = topk_window(coarse, [QUERY_ID_COL], order, coarse_k).drop(
-            "rank"
-        )
-
-        if k_factor > 1.0:
-            cand = coarse_topk.select(QUERY_ID_COL, ID_COL)
-            vecs = self._float_vectors(base).select(ID_COL, VECTOR_COL)
-            qv = q.select(QUERY_ID_COL, F.col(VECTOR_COL).alias("__qvec"))
-            result = (
-                vecs.join(cand, ID_COL)
-                .join(qv, QUERY_ID_COL)
-                .select(
-                    QUERY_ID_COL,
-                    ID_COL,
-                    distance_expr("__qvec", VECTOR_COL, metric).alias(
-                        DISTANCE_COL
-                    ),
-                )
-            )
-        else:
-            if metric is DistanceMetric.L2:
-                coarse_topk = coarse_topk.withColumn(
-                    DISTANCE_COL, F.sqrt(F.col(DISTANCE_COL))
-                )
-            result = coarse_topk
-
-        if self._has_updates():
-            additions = self._additions()
-            if allowed_ids is not None:
-                additions = additions.join(allowed_ids, ID_COL, "left_semi")
-            if excluded_ids is not None:
-                additions = additions.join(excluded_ids, ID_COL, "left_anti")
-            result = result.unionByName(
-                knn_bruteforce_expr(additions, q, k, metric).drop("rank")
-            )
-        ov_scored = self._overlay_scored(q, k, metric, allowed_ids, excluded_ids)
-        if ov_scored is not None:
-            # dedup (query, id) pairs that the probe and the overlay both
-            # produced — see the kernel path's comment
-            result = (
-                result.unionByName(ov_scored)
-                .groupBy(QUERY_ID_COL, ID_COL)
-                .agg(F.min(DISTANCE_COL).alias(DISTANCE_COL))
-            )
-        res = topk_window(result, [QUERY_ID_COL], order, k)
-        if pad:
-            from tiledb_vector_search_spark.operators.topk import pad_to_k
-
-            res = pad_to_k(res, queries, k)
-        return res
 
     def _float_vectors(self, base: DataFrame) -> DataFrame:
         """Promote a packed-binary vector column for expression-path joins
@@ -1381,70 +1208,44 @@ class IVFPQIndex(Index):
         coarse_k: int,
         scan_tasks: int | None = None,
     ) -> DataFrame:
-        """Asymmetric-distance scan: per-query lookup tables over codes.
+        """The ``kernel`` plan's per-cell partial coarse top-k's: the
+        driver-routed queries broadcast into a scan of the probed cells'
+        (partition_id, external_id, code) columns only."""
+        return probe_scan(
+            base.select(PARTITION_COL, ID_COL, CODE_COL),
+            self._cell_scorer(coarse_k),
+            qids, qmat, pairs, scan_tasks=scan_tasks,
+        )
 
-        Reference ``sub_distance_asymmetric`` + table builder
-        (``ivf_pq_index.h:627-690``) — table[q, j, c] = ‖q_sub_j − cb[j,c]‖²;
-        vector distance ≈ Σ_j table[q, j, code_j].  Reads only the
-        (partition_id, external_id, code) columns.
+    def _cell_scorer(self, coarse_k: int):
+        """The per-cell body of both strategies: asymmetric distances of
+        the cell's codes for the queries routed to it (``adc_topk``).
 
-        Residual indexes (spark-0.3) shift the table target per probed
-        partition: table[q, pid, j, c] = ‖(q − centroid[pid])_sub_j −
-        cb[j,c]‖², built INSIDE the kernel from the broadcast (queries,
-        centroids, codebooks) — routed·dims·256 flops per partition, so
-        the broadcast stays constant-size instead of nq·nprobe·m·256.
-        """
+        Residual indexes (spark-0.3) shift the table target per cell,
+        table[q, j, c] = ‖(q − centroid[pid])_sub_j − cb[j,c]‖², built
+        inside the scorer from the broadcast codebooks and centroids —
+        routed·dims·256 flops per cell, so the broadcast stays
+        constant-size instead of nq·nprobe·m·256."""
         import pandas as pd
 
-        cb = self.codebooks()  # (m, 256, sub_dim)
-        m = cb.shape[0]
-        residual = self.pq_residual
-        route_map = queries_by_partition(pairs)
-        qpos = {int(qid): i for i, qid in enumerate(qids)}
-        if residual:
-            payload = (qmat, cb, self.centroids(), route_map, qpos)
-        else:
-            payload = (adc_tables(qmat, cb), None, None, route_map, qpos)
-        bc = self.spark.sparkContext.broadcast(payload)
-
-        def score(batches):
-            tab_or_q, cb_l, cents_l, rmap, qpos_l = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for pid, grp in pdf.groupby(PARTITION_COL):
-                    routed = rmap.get(int(pid))
-                    if not routed:
-                        continue
-                    rpos = [qpos_l[qid] for qid in routed]
-                    if cb_l is not None:
-                        # residual tables for THIS partition's routed queries
-                        tabs = adc_tables(
-                            tab_or_q[rpos] - cents_l[int(pid)][None, :], cb_l
-                        )
-                    else:
-                        tabs = tab_or_q[rpos]
-                    ids = grp[ID_COL].to_numpy(dtype=np.int64)
-                    codes = np.frombuffer(
-                        b"".join(grp[CODE_COL]), dtype=np.uint8
-                    ).reshape(len(ids), m)
-                    rows, out_i, out_d = topk_rows(
-                        adc_distances(tabs, codes), ids, coarse_k
-                    )
-                    yield pd.DataFrame(
-                        {
-                            QUERY_ID_COL: np.asarray(routed, dtype=np.int64)[rows],
-                            ID_COL: out_i,
-                            DISTANCE_COL: out_d,
-                        }
-                    )
-
-        sel = base.select(PARTITION_COL, ID_COL, CODE_COL)
-        if scan_tasks is not None:
-            # byte-derived task count (Index._kernel_scan_tasks) — a
-            # no-op whenever the scan already has fewer splits
-            sel = sel.coalesce(scan_tasks)
-        return sel.mapInPandas(
-            score,
-            schema=f"{QUERY_ID_COL} long, {ID_COL} long, {DISTANCE_COL} double",
+        bc = self.spark.sparkContext.broadcast(
+            (
+                self.codebooks(),  # (m, 256, sub_dim)
+                self.centroids() if self.pq_residual else None,
+            )
         )
+
+        def score(pid, cell, qids, qmat):
+            cb, cents = bc.value
+            ids = cell[ID_COL].to_numpy(dtype=np.int64)
+            codes = np.frombuffer(
+                b"".join(cell[CODE_COL]), dtype=np.uint8
+            ).reshape(len(ids), cb.shape[0])
+            if cents is not None:
+                qmat = qmat - cents[pid][None, :]
+            rows, out_i, out_d = adc_topk(qmat, cb, codes, ids, coarse_k)
+            return pd.DataFrame(
+                {QUERY_ID_COL: qids[rows], ID_COL: out_i, DISTANCE_COL: out_d}
+            )
+
+        return score

@@ -34,7 +34,12 @@ from tiledb_vector_search_spark.functions.distance import (
     DistanceMetric,
     normalize_expr,
 )
-from tiledb_vector_search_spark.indexes.base import Index, count_and_dims
+from tiledb_vector_search_spark.indexes.base import (
+    Index,
+    count_and_dims,
+    probe_cogroup,
+    probe_scan,
+)
 from tiledb_vector_search_spark.ml.kmeans import (
     assign_partitions_expr,
     default_training_sample_size,
@@ -51,12 +56,7 @@ from tiledb_vector_search_spark.ml.vamana import (
     search_vamana_graph,
     sq_dists,
 )
-from tiledb_vector_search_spark.operators.knn import knn_bruteforce_expr
-from tiledb_vector_search_spark.operators.routing import (
-    queries_by_partition,
-    route_queries,
-)
-from tiledb_vector_search_spark.operators.topk import topk_window
+from tiledb_vector_search_spark.operators.routing import route_queries
 from tiledb_vector_search_spark.schemas import (
     DISTANCE_COL,
     ID_COL,
@@ -779,10 +779,6 @@ class VamanaIndex(Index):
 
     # -- query ----------------------------------------------------------------
 
-    # query batches beyond this route via a distributed cogroup instead of
-    # a driver collect (same contract as IVFFlatIndex.LARGE_NQ)
-    LARGE_NQ = 4096
-
     def _shard_masked_counts(
         self, excluded_ids: DataFrame | None = None
     ) -> dict[int, int]:
@@ -851,10 +847,13 @@ class VamanaIndex(Index):
         from the medoid with beam ``l_search`` (default ``max(k, 100)``-ish;
         we default to ``max(2k, 50)``).
 
-        Strategies: ``kernel`` (driver-collected queries broadcast with the
-        routing map — small batches), ``join`` (fully distributed: routing
-        join + shard⨝queries cogroup, no driver collect — large batches),
-        ``auto`` (kernel below LARGE_NQ, join above).
+        Strategies: ``kernel`` routes the collected batch on the driver
+        and broadcasts the route map to the shard walks; ``join`` routes on
+        the executors and cogroups each shard with the queries routed to
+        it, with no driver collect (large batches); ``auto`` is kernel up
+        to ``operators.knn.KERNEL_MAX_NQ`` queries and join above.  Both
+        walk each shard with the same scorer (``_cell_scorer``) and share
+        the merge, so they return the same bits.
         """
         if not self.query_base_array:
             # updates-only range open: no base, no graph to walk —
@@ -887,41 +886,8 @@ class VamanaIndex(Index):
         q = queries.select(QUERY_ID_COL, VECTOR_COL)
         if metric is DistanceMetric.COSINE:
             q = q.withColumn(VECTOR_COL, normalize_expr(VECTOR_COL).cast("array<float>"))
-        if strategy == "auto":
-            # one job: the bounded collect doubles as the small-batch fetch
-            q_rows = q.limit(self.LARGE_NQ + 1).collect()
-            if len(q_rows) > self.LARGE_NQ:
-                self._validate_queries(queries)  # distributed data check
-                return self._query_join(
-                    q, k, nprobe, l_search, metric, pad, queries, excluded_ids
-                )
-        elif strategy == "join":
-            self._validate_queries(queries)
-            return self._query_join(
-                q, k, nprobe, l_search, metric, pad, queries, excluded_ids
-            )
-        elif strategy == "kernel":
-            q_rows = q.collect()
-        else:
-            raise ValueError(f"unknown strategy: {strategy}")
-        self._validate_query_rows(q_rows)
-        qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
-
-        # routing is a driver-side numpy task — no Spark round-trip
-        pairs = route_queries(qids, qmat, self.centroids(), nprobe)
-        parts = sorted({p for _, p in pairs})
-        base = self._base_vectors().where(F.col(PARTITION_COL).isin(parts))
-
-        route_map = queries_by_partition(pairs)
+        q_rows = self._collect_queries(q, queries, strategy)
         overlay = self._overlay_frame()
-        if overlay is not None:
-            # the bridge graph is an extra pseudo-shard EVERY query probes
-            base = base.select(
-                PARTITION_COL, ID_COL, VECTOR_COL, "neighbors"
-            ).unionByName(overlay)
-            route_map[OVERLAY_PID] = [int(q) for q in qids]
-        qpos = {int(qid): i for i, qid in enumerate(qids)}
         # masked ids (tombstones + caller-excluded) are never collected —
         # the walk over-fetches by the per-shard COUNT and the results
         # are anti-joined below
@@ -934,55 +900,26 @@ class VamanaIndex(Index):
             # overlay rows duplicate base rows, so its tombstone exposure is
             # bounded by the total across shards
             tombs[OVERLAY_PID] = sum(tombs.values())
-        medoids = self.medoids()
-        bc = self.spark.sparkContext.broadcast(
-            (qids, qmat, route_map, qpos, tombs, medoids)
+        score = self._cell_scorer(k, l_search, tombs)
+        graphs = self._base_vectors().select(
+            PARTITION_COL, ID_COL, VECTOR_COL, "neighbors"
         )
-        kk, ls = k, l_search
-        vdtype = self.vector_dtype
-        from tiledb_vector_search_spark.functions.dtypes import (
-            decode_matrix as _decode,
-        )
-
-        def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-            qids_l, qmat_l, rmap, qpos_l, tombs_l, meds = bc.value
-            if len(pdf) == 0:
-                return pd.DataFrame(
-                    {QUERY_ID_COL: [], ID_COL: [], DISTANCE_COL: []}
-                )
-            pid = int(pdf[PARTITION_COL].iloc[0])
-            routed = rmap.get(pid)
-            if not routed:
-                return pd.DataFrame(
-                    {QUERY_ID_COL: [], ID_COL: [], DISTANCE_COL: []}
-                )
-            # over-walk enough to survive the post-walk tombstone anti-join
-            return _walk_shard(
-                pid,
-                pdf[ID_COL].to_numpy(dtype=np.int64),
-                _decode(pdf[VECTOR_COL], vdtype),
-                pdf["neighbors"],
-                meds.get(pid),
-                np.asarray(routed, dtype=np.int64),
-                qmat_l[[qpos_l[qid] for qid in routed]],
-                kk + tombs_l.get(pid, 0),
-                ls,
+        if q_rows is None:
+            scored = self._query_join(q, graphs, nprobe, score)
+        else:
+            qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+            qmat = np.array([r[1] for r in q_rows], dtype=np.float64)
+            # routing is a driver-side numpy task — no Spark round-trip
+            pairs = route_queries(qids, qmat, self.centroids(), nprobe)
+            graphs = graphs.where(
+                F.col(PARTITION_COL).isin(sorted({p for _, p in pairs}))
             )
+            if overlay is not None:
+                # the bridge graph is an extra pseudo-shard EVERY query probes
+                graphs = graphs.unionByName(overlay)
+                pairs = pairs + [(int(qid), OVERLAY_PID) for qid in qids]
+            scored = probe_scan(graphs, score, qids, qmat, pairs, whole_cells=True)
 
-        schema = f"{QUERY_ID_COL} long, {ID_COL} long, {DISTANCE_COL} double"
-        scored = (
-            base.select(PARTITION_COL, ID_COL, VECTOR_COL, "neighbors")
-            .groupBy(PARTITION_COL)
-            .applyInPandas(walk, schema)
-        )
-        if overlay is not None:
-            # a vector found by both its shard walk and the overlay scan
-            # would otherwise occupy two ranks; keep the MIN distance so
-            # the survivor is deterministic (the two scores can differ by
-            # ~1e-16 — BLAS-identity vs subtractive fold)
-            scored = scored.groupBy(QUERY_ID_COL, ID_COL).agg(
-                F.min(DISTANCE_COL).alias(DISTANCE_COL)
-            )
         # the walk scores Σ(a−b)²; convert to the index metric's scale so the
         # additions branch (scored with distance_expr) unions consistently:
         # L2 = √sos; for unit vectors cosine distance = sos/2
@@ -995,135 +932,59 @@ class VamanaIndex(Index):
             # which legitimately re-adds updated ids); AQE picks broadcast
             # when the updates log is small
             scored = scored.join(self._updated_ids(), ID_COL, "left_anti")
-            additions = self._additions()
-            if excluded_ids is not None:
-                additions = additions.join(excluded_ids, ID_COL, "left_anti")
-            add_scored = knn_bruteforce_expr(additions, q, k, metric).drop("rank")
-            scored = scored.unionByName(add_scored)
         if excluded_ids is not None:
             scored = scored.join(excluded_ids, ID_COL, "left_anti")
-        order = [F.col(DISTANCE_COL).asc(), F.col(ID_COL).asc()]
-        res = topk_window(scored, [QUERY_ID_COL], order, k)
-        if pad:
-            from tiledb_vector_search_spark.operators.topk import pad_to_k
-
-            res = pad_to_k(res, queries, k)
-        return res
+        # a vector found by both its shard walk and the overlay scan would
+        # otherwise occupy two ranks; the tail's min() keeps one (the two
+        # scores can differ by ~1e-16 — BLAS-identity vs subtractive fold)
+        return self._merge_topk(
+            scored, q, queries, k, pad, excluded_ids=excluded_ids,
+            dedup=overlay is not None,
+        )
 
     def _query_join(
-        self,
-        q: DataFrame,
-        k: int,
-        nprobe: int,
-        l_search: int,
-        metric: DistanceMetric,
-        pad: bool,
-        queries: DataFrame,
-        excluded_ids: DataFrame | None = None,
+        self, q: DataFrame, graphs: DataFrame, nprobe: int, score
     ) -> DataFrame:
-        """Fully distributed graph query: no driver materialization.
+        """The ``join`` plan's shard walks: no driver materialization.
 
-        routing = queries ⋈ broadcast(centroids) rank ≤ nprobe
-        (``routing_table_join``); each shard's graph COGROUPs with the
-        queries routed to it, so the per-query walk state lives on the
-        executor that holds the shard — the only driver-sized artifacts
-        shipped are the medoid map and the per-shard tombstone COUNTS
-        (one int per shard; the updates log itself is never collected —
-        walk results are anti-joined against it distributively).
-        """
-        from tiledb_vector_search_spark.operators.routing import (
-            routing_table_join,
-        )
-
-        routing = routing_table_join(
-            q, self.centroids(), nprobe, QUERY_ID_COL, VECTOR_COL
-        )
-        routed_q = routing.join(
-            q.select(QUERY_ID_COL, F.col(VECTOR_COL).alias("__qvec")),
-            QUERY_ID_COL,
-        ).select(PARTITION_COL, QUERY_ID_COL, "__qvec")
+        Query batches are routed on the executors by the driver plan's own
+        router (``routing_table_join``) and each shard's graph COGROUPs
+        with the queries routed to it, so the walk state lives on the
+        executor that holds the shard; every query also probes the
+        overlay pseudo-shard.  The only driver-sized artifacts shipped are
+        the medoid map and the per-shard tombstone COUNTS inside ``score``
+        (the updates log itself is never collected)."""
         overlay = self._overlay_frame()
         if overlay is not None:
-            routed_q = routed_q.unionByName(
-                q.select(
-                    F.lit(OVERLAY_PID).cast("int").alias(PARTITION_COL),
-                    QUERY_ID_COL,
-                    F.col(VECTOR_COL).alias("__qvec"),
-                )
+            graphs = graphs.unionByName(overlay)
+        routed = self._route_join(
+            q, nprobe, OVERLAY_PID if overlay is not None else None
+        )
+        return probe_cogroup(graphs, routed, score)
+
+    def _cell_scorer(self, k: int, l_search: int, tombs: dict):
+        """The per-shard body of both strategies: ``_walk_shard`` for the
+        queries routed to the shard, over-walking by the shard's masked
+        count so k results survive the result-side anti-joins."""
+        vdtype = self.vector_dtype
+        bc = self.spark.sparkContext.broadcast((tombs, self.medoids()))
+
+        def score(pid, cell, qids, qmat):
+            from tiledb_vector_search_spark.functions.dtypes import (
+                decode_matrix,
             )
 
-        tombs = (
-            self._shard_masked_counts(excluded_ids)
-            if self._has_updates() or excluded_ids is not None
-            else {}
-        )
-        if overlay is not None and tombs:
-            tombs[OVERLAY_PID] = sum(tombs.values())
-        medoids = self.medoids()
-        bc = self.spark.sparkContext.broadcast((tombs, medoids))
-        kk, ls = k, l_search
-        vdtype = self.vector_dtype
-        from tiledb_vector_search_spark.functions.dtypes import (
-            decode_matrix as _decode,
-        )
-
-        def walk2(graph_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
             tombs_l, meds = bc.value
-            empty = pd.DataFrame({QUERY_ID_COL: [], ID_COL: [], DISTANCE_COL: []})
-            if len(graph_pdf) == 0 or len(q_pdf) == 0:
-                return empty
-            pid = int(graph_pdf[PARTITION_COL].iloc[0])
             return _walk_shard(
                 pid,
-                graph_pdf[ID_COL].to_numpy(dtype=np.int64),
-                _decode(graph_pdf[VECTOR_COL], vdtype),
-                graph_pdf["neighbors"],
+                cell[ID_COL].to_numpy(dtype=np.int64),
+                decode_matrix(cell[VECTOR_COL], vdtype),
+                cell["neighbors"],
                 meds.get(pid),
-                q_pdf[QUERY_ID_COL].to_numpy(dtype=np.int64),
-                np.array(
-                    [np.asarray(v, dtype=np.float64) for v in q_pdf["__qvec"]]
-                ),
-                kk + tombs_l.get(pid, 0),
-                ls,
+                qids,
+                qmat,
+                k + tombs_l.get(pid, 0),
+                l_search,
             )
 
-        schema = f"{QUERY_ID_COL} long, {ID_COL} long, {DISTANCE_COL} double"
-        graphs = self._base_vectors().select(
-            PARTITION_COL, ID_COL, VECTOR_COL, "neighbors"
-        )
-        if overlay is not None:
-            graphs = graphs.unionByName(overlay)
-        scored = (
-            graphs.groupBy(PARTITION_COL)
-            .cogroup(routed_q.groupBy(PARTITION_COL))
-            .applyInPandas(walk2, schema)
-        )
-        if overlay is not None:
-            # min-distance dedup (see kernel path)
-            scored = scored.groupBy(QUERY_ID_COL, ID_COL).agg(
-                F.min(DISTANCE_COL).alias(DISTANCE_COL)
-            )
-        # same metric rescale + additions overlay + merge as the kernel path
-        if metric is DistanceMetric.L2:
-            scored = scored.withColumn(DISTANCE_COL, F.sqrt(F.col(DISTANCE_COL)))
-        elif metric is DistanceMetric.COSINE:
-            scored = scored.withColumn(DISTANCE_COL, F.col(DISTANCE_COL) / 2.0)
-        if self._has_updates():
-            # distributed tombstone filter before the additions overlay
-            scored = scored.join(self._updated_ids(), ID_COL, "left_anti")
-            additions = self._additions()
-            if excluded_ids is not None:
-                additions = additions.join(excluded_ids, ID_COL, "left_anti")
-            add_scored = knn_bruteforce_expr(additions, q, k, metric).drop(
-                "rank"
-            )
-            scored = scored.unionByName(add_scored)
-        if excluded_ids is not None:
-            scored = scored.join(excluded_ids, ID_COL, "left_anti")
-        order = [F.col(DISTANCE_COL).asc(), F.col(ID_COL).asc()]
-        res = topk_window(scored, [QUERY_ID_COL], order, k)
-        if pad:
-            from tiledb_vector_search_spark.operators.topk import pad_to_k
-
-            res = pad_to_k(res, queries, k)
-        return res
+        return score

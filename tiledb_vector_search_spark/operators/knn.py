@@ -48,7 +48,9 @@ _KNN_PAIR_SCHEMA = (
 )
 
 # the kernel strategy collects + broadcasts the query batch; this bound
-# keeps that a driver micro-task (same ceiling as the index LARGE_NQ gates)
+# keeps that a driver micro-task.  The probe-routed indexes' ``auto``
+# strategy takes its join plan above it, and every per-cell scorer sees at
+# most this many queries at once
 KERNEL_MAX_NQ = 4096
 
 
@@ -502,7 +504,8 @@ def knn_join(
     elif strategy == "kernel":
         # per-partition BLAS scoring + partial top-k: cogroup puts one
         # partition's left slice and right members in one task — the
-        # ivf_flat._query_join shape, index-free
+        # shape of the indexes' join plans (indexes.base.probe_cogroup),
+        # index-free
         # hot-cell auto-split (see docstring): salt oversized cells so no
         # single cogroup task owns a mega-cell.  The detection aggregate
         # costs one extra pass over the right side's assignment (narrow:

@@ -5,20 +5,21 @@ computes, per query, the ``nprobe`` nearest centroids, producing a
 (partition → queries) multimap that drives partition-pruned search and IO
 locality (``detail/ivf/qv.h:36-50``).
 
-Spark-first: the routing table is a *small DataFrame* (nq × nprobe rows).
-Centroids are tiny (≤10k × dims — reference caps partitions at 10k), so the
-routing computation is a driver-side numpy argpartition; the result is
-broadcast into the partition-pruned join.  The Parquet ``partition_id``
-directory layout makes the pruning a file-listing operation — the Spark
-analogue of the reference's CSR-offset slicing (SURVEY §1.3).
+Spark-first: centroids are tiny (≤10k × dims — reference caps partitions
+at 10k), so routing is one numpy function, :func:`route_queries`, run
+wherever the queries are.  A small batch is collected and routed on the
+driver, and the (partition → queries) map is broadcast into the
+partition-pruned scan; the Parquet ``partition_id`` directory layout makes
+the pruning a file-listing operation — the Spark analogue of the
+reference's CSR-offset slicing (SURVEY §1.3).  A large batch is routed
+batch by batch on the executors (:func:`routing_table_join`) and reaches
+its partitions through a shuffle on ``partition_id``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
-
-from tiledb_vector_search_spark.session import small_df
+from pyspark.sql import DataFrame
 
 
 def route_queries(
@@ -40,11 +41,13 @@ def route_queries(
     # only moves exact-hit values of ~-1e-16 to 0, where the stable
     # argsort's index order is the documented partition-id tie-break
     d = _kernel_distances(qmat, centroids, DistanceMetric.SUM_OF_SQUARES)
-    pairs: list[tuple[int, int]] = []
-    for qi, row in zip(qids, d):
-        top = np.argsort(row, kind="stable")[:nprobe]
-        pairs.extend((int(qi), int(p)) for p in top)
-    return pairs
+    top = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
+    return list(
+        zip(
+            np.repeat(np.asarray(qids, dtype=np.int64), top.shape[1]).tolist(),
+            top.ravel().tolist(),
+        )
+    )
 
 
 def queries_by_partition(pairs: list[tuple[int, int]]) -> dict[int, list[int]]:
@@ -55,17 +58,6 @@ def queries_by_partition(pairs: list[tuple[int, int]]) -> dict[int, list[int]]:
     return groups
 
 
-def routing_table(
-    spark: SparkSession,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    centroids: np.ndarray,
-    nprobe: int,
-) -> DataFrame:
-    pairs = route_queries(qids, qmat, centroids, nprobe)
-    return small_df(spark, pairs, "query_id long, partition_id int")
-
-
 def routing_table_join(
     queries: DataFrame,
     centroids: np.ndarray,
@@ -73,40 +65,35 @@ def routing_table_join(
     query_id_col: str = "query_id",
     vector_col: str = "vector",
 ) -> DataFrame:
-    """Distributed routing: queries × broadcast(centroids) → rank ≤ nprobe.
+    """Distributed routing: (partition_id, query id, query vector) rows,
+    one per probed partition of each query.
 
     The scale path when the query batch itself is large (the reference's
-    small-query contract doesn't hold): no driver collect — routing is a
-    broadcast nested-loop + WindowGroupLimit, fully distributed.
+    small-query contract doesn't hold): no driver collect.  Each query
+    batch runs :func:`route_queries` against the broadcast centroids, so
+    this plan and the driver-routed one make the same probe decisions.
     """
-    from pyspark.sql import functions as F
-
-    from tiledb_vector_search_spark.functions.distance import (
-        DistanceMetric,
-        distance_expr,
-    )
-    from tiledb_vector_search_spark.operators.topk import topk_window
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = queries.sparkSession
-    nprobe = min(nprobe, centroids.shape[0])
-    cdf = small_df(
-        spark,
-        [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)],
-        "partition_id int, centroid array<double>",
+    q = queries.select(query_id_col, vector_col)
+    schema = StructType(
+        [StructField("partition_id", IntegerType(), False)] + q.schema.fields
     )
-    scored = queries.select(query_id_col, vector_col).crossJoin(
-        F.broadcast(cdf)
-    ).select(
-        query_id_col,
-        "partition_id",
-        distance_expr(vector_col, "centroid", DistanceMetric.SUM_OF_SQUARES).alias(
-            "__d"
-        ),
-    )
-    return topk_window(
-        scored,
-        [query_id_col],
-        [F.col("__d").asc(), F.col("partition_id").asc()],
-        nprobe,
-    ).select(query_id_col, "partition_id")
+    bc = spark.sparkContext.broadcast(centroids)
 
+    def route(batches):
+        cents = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            qmat = np.array(list(pdf[vector_col]), dtype=np.float64)
+            pos, pid = np.array(
+                route_queries(np.arange(len(pdf)), qmat, cents, nprobe),
+                dtype=np.int64,
+            ).reshape(-1, 2).T
+            out = pdf.iloc[pos].reset_index(drop=True)
+            out.insert(0, "partition_id", pid.astype(np.int32))
+            yield out
+
+    return q.mapInPandas(route, schema=schema)

@@ -77,7 +77,12 @@ def small_df(spark: SparkSession, rows: list, schema: str):
     ~150 ms × 32 slices ≈ 5 s to write a 32-row table on local[32].  Small
     driver-side tables (centroids, routing, query batches) are always one
     Arrow batch worth of data, so one slice is both correct and ~10× faster.
+
+    The frame is built through ``spark.createDataFrame``, so it belongs to
+    ``spark``: ``RDD.toDF`` binds to the most recently constructed Python
+    session, which after a streaming ``foreachBatch`` callback is that
+    batch's cloned session, whose temp views ``spark.sql`` cannot see.
     """
     if not rows:
         return spark.createDataFrame([], schema)
-    return spark.sparkContext.parallelize(rows, 1).toDF(schema)
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)

@@ -14,7 +14,7 @@ directories.  That is the same partition-pruned IO the DataFrame path
 gets from Catalyst, obtained here by file listing, because executors
 have no SparkSession to plan with.  Scoring, partial top-k and the final
 merge run through the DataFrame kernel strategy's own per-block
-functions (``operators.knn.block_topk``, ``indexes.ivf_pq.adc_tables``,
+functions (``operators.knn.block_topk``, ``indexes.ivf_pq.adc_topk``,
 ``indexes.vamana._walk_shard``, ``operators.topk.topk_merge``), so the
 two surfaces cannot drift apart.
 This mirrors the reference's embedded query model (each worker owns its
@@ -76,7 +76,6 @@ from tiledb_vector_search_spark.functions.dtypes import decode_matrix
 from tiledb_vector_search_spark.operators.knn import (
     block_topk,
     paired_sum_of_squares,
-    topk_rows,
 )
 from tiledb_vector_search_spark.operators.routing import (
     queries_by_partition,
@@ -335,6 +334,13 @@ def _read_vectors(
     return ids[keep], x[keep]
 
 
+def _by_id(ids: np.ndarray, *cols):
+    """A cell's columns in id order — the row layout the DataFrame plans'
+    per-cell scorers see (``indexes.base._cell_topk``)."""
+    order = np.argsort(ids, kind="stable")
+    return (ids[order],) + tuple(c[order] for c in cols)
+
+
 def _normalize_queries_f32(qmat: np.ndarray) -> np.ndarray:
     """Mirror the DataFrame path's query normalization EXACTLY: Catalyst's
     ``normalize_expr(...).cast("array<float>")`` rounds the normalized
@@ -391,7 +397,7 @@ def _overlay_parts(
     ov_dir = posixpath.join(uri, "aux", aux, f"ts={ts}")
     if not _is_dir(ov_dir):
         return []
-    ids, x = _read_vectors(ov_dir, vector_dtype, tomb, allowed)
+    ids, x = _by_id(*_read_vectors(ov_dir, vector_dtype, tomb, allowed))
     return _scan_block(qmat, ids, x, k, metric)
 
 
@@ -481,6 +487,10 @@ def search_index_files(
     allowed = (
         None if allowed_ids_path is None else _load_allowed(allowed_ids_path)
     )
+    # queries in id order: each probed cell then scores its routed queries
+    # in the order the DataFrame plans' per-cell scorers use
+    order = np.argsort(qids, kind="stable")
+    qids, qmat = qids[order], qmat[order]
     if start_timestamp is not None:
         meta0, _lts, metric0, _vd, _p = _open_index_meta(uri, None)
         if int(start_timestamp) > int(meta0["ingestions"][0]["ts"]):
@@ -598,7 +608,7 @@ def _ivf_flat_parts(
     parts = []
     centroids = _load_centroids(uri, ts)
     for _pid, pdir, qpos in _probes(uri, ts, qmat, centroids, nprobe):
-        ids, x = _read_vectors(pdir, vector_dtype, tomb, allowed)
+        ids, x = _by_id(*_read_vectors(pdir, vector_dtype, tomb, allowed))
         parts += _scan_block(qmat, ids, x, k, scan, qpos)
     return parts + _overlay_parts(
         uri, "ivf_overlay", ts, vector_dtype, qmat, k, scan, tomb, allowed
@@ -623,24 +633,20 @@ def _ivf_pq_parts(
 ):
     """ADC scan over the packed ``code`` column + optional exact re-rank.
 
-    Mirrors ``IVFPQIndex.query(strategy="kernel")``: the same ADC tables
-    and code sums (``indexes.ivf_pq.adc_tables`` / ``adc_distances``),
-    per-partition residual tables for spark-0.3 indexes, and the
-    (distance, id) tie-break.  Per-task IO: the coarse pass reads
+    Mirrors ``IVFPQIndex.query(strategy="kernel")``: the same per-cell
+    ADC scan (``indexes.ivf_pq.adc_topk``), shifted by the cell's
+    centroid on residual spark-0.3 indexes, and the (distance, id)
+    tie-break.  Per-task IO: the coarse pass reads
     (external_id, code) of probed partitions only — ``num_subspaces``
     bytes per row — and the re-rank pass re-reads ONLY the candidate
     rows' partitions' (external_id, vector).
     """
-    from tiledb_vector_search_spark.indexes.ivf_pq import (
-        adc_distances,
-        adc_tables,
-    )
+    from tiledb_vector_search_spark.indexes.ivf_pq import adc_topk
 
     m = int(meta["num_subspaces"])
     centroids = _load_centroids(uri, ts)
     cb = _load_codebooks(uri, ts, m)
     residual = bool(meta.get("pq_residual", False))
-    tables = None if residual else adc_tables(qmat, cb)
     coarse_k = max(k, int(math.ceil(k * k_factor)))
     coarse, coarse_pid = [], []
     for pid, pdir, qpos in _probes(uri, ts, qmat, centroids, nprobe):
@@ -650,14 +656,11 @@ def _ivf_pq_parts(
             b"".join(tb.column("code").to_pylist()), dtype=np.uint8
         ).reshape(len(ids), m)
         keep = _keep_mask(ids, tomb, allowed)
-        ids, codes = ids[keep], codes[keep]
+        ids, codes = _by_id(ids[keep], codes[keep])
         if len(ids) == 0:
             continue
-        if residual:
-            tabs = adc_tables(qmat[qpos] - centroids[pid][None, :], cb)
-        else:
-            tabs = tables[qpos]
-        rows, out_i, out_d = topk_rows(adc_distances(tabs, codes), ids, coarse_k)
+        target = qmat[qpos] - centroids[pid][None, :] if residual else qmat[qpos]
+        rows, out_i, out_d = adc_topk(target, cb, codes, ids, coarse_k)
         coarse.append((qpos[rows], out_i, out_d))
         coarse_pid.append(np.full(len(rows), pid))
 
@@ -731,12 +734,16 @@ def _vamana_parts(uri, ts, vector_dtype, qmat, k, nprobe, tomb, l_search):
         tb = _read_parquet_dir(
             pdir, columns=["external_id", "vector", "neighbors"]
         )
-        ids = tb.column("external_id").to_numpy()
+        ids, x, neighbors = _by_id(
+            tb.column("external_id").to_numpy(),
+            decode_matrix(tb.column("vector").to_pylist(), vector_dtype),
+            tb.column("neighbors").to_numpy(zero_copy_only=False),
+        )
         walked = _walk_shard(
             pid,
             ids,
-            decode_matrix(tb.column("vector").to_pylist(), vector_dtype),
-            tb.column("neighbors").to_numpy(zero_copy_only=False),
+            x,
+            neighbors,
             medoids.get(pid),
             qpos,
             qmat[qpos],

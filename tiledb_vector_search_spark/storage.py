@@ -808,8 +808,12 @@ class HadoopFS:
         try:
             out = self._fs.create(p, False)
             out.close()
-        except Exception:
-            return False
+        except Exception as exc:
+            # only "the lock exists" means another writer holds it; a
+            # permission or I/O error must not read as a lost race
+            if _java_exc_is(exc, "FileAlreadyExistsException"):
+                return False
+            raise
         out = self._fs.create(p, True)
         try:
             out.write(bytearray(content.encode("utf-8")))
@@ -843,11 +847,15 @@ class HadoopFS:
         """Plain namespace rename: False when ``src`` is already gone
         (the arbitration primitive for stale-lock takeover — exactly
         one concurrent rename finds the source).  Never deletes an
-        existing ``dst``; callers pass unique destinations."""
+        existing ``dst``; callers pass unique destinations.  Any other
+        failure (permissions, I/O) raises rather than reading as a lost
+        race."""
         try:
             return bool(self._fs.rename(self._p(src), self._p(dst)))
-        except Exception:
-            return False
+        except Exception as exc:
+            if _java_exc_is(exc, "FileNotFoundException"):
+                return False
+            raise
 
     def sweep_stale_lock_siblings(self, lock_path: str, ttl_ms: int) -> int:
         """Delete leaked lock-protocol temp files next to ``lock_path``:

@@ -18,18 +18,18 @@ from tiledb_vector_search_spark.driver_io import (
     append_small_parquet,
     ddl_to_arrow_schema,
     local_os_path,
-    read_small_rows,
+    read_small_table,
     write_small_parquet,
 )
 from tiledb_vector_search_spark.session import small_df
 
 
 def test_local_os_path():
-    assert local_os_path("/tmp/x") == "/tmp/x"
-    assert local_os_path("file:/tmp/x") == "/tmp/x"
-    assert local_os_path("file:///tmp/x") == "/tmp/x"
-    assert local_os_path("hdfs://nn/x") is None
-    assert local_os_path("s3a://bucket/x") is None
+    for uri in ("/tmp/x", "file:/tmp/x", "file:///tmp/x", "file://localhost/tmp/x"):
+        assert local_os_path(uri) == "/tmp/x"
+    assert local_os_path("rel/x") == "rel/x"
+    for uri in ("hdfs://nn/x", "s3a://bucket/x", "file://otherhost/x"):
+        assert local_os_path(uri) is None
 
 
 def test_ddl_schema_arrays():
@@ -65,17 +65,46 @@ def test_write_refuses_existing_target(spark, tmp_path):
         write_small_parquet(spark, p, ROWS, DDL)
 
 
-def test_read_small_rows_matches_spark_order(spark, tmp_path):
+def test_centroids_decode_in_partition_order(spark, tmp_path):
+    """The pyarrow read of a local artifact and the Spark read used for
+    other URIs decode to the same partition-ordered centroids."""
+    from tiledb_vector_search_spark.indexes.base import decode_centroids
+
     p = str(tmp_path / "tbl")
     rows = [(3, [1.0]), (1, [2.0]), (2, [3.0])]
     write_small_parquet(spark, p, rows, DDL)
-    got = read_small_rows(spark, p, order_by=("partition_id",))
-    assert [r["partition_id"] for r in got] == [1, 2, 3]
-    assert [list(r["centroid"]) for r in got] == [[2.0], [3.0], [1.0]]
-    via_spark = (
-        spark.read.parquet(p).orderBy("partition_id").collect()
+    got = decode_centroids(read_small_table(spark, p))
+    np.testing.assert_array_equal(got, [[2.0], [3.0], [1.0]])
+    via_spark = decode_centroids(spark.read.parquet(p).toArrow())
+    np.testing.assert_array_equal(via_spark, got)
+
+
+def test_partition_bytes_same_for_every_local_form(spark, tmp_path, monkeypatch):
+    """One index opened as a bare path, ``file:`` and ``file:///`` gives
+    the same per-partition byte map, and no local open lists through the
+    JVM (py4j round-trips per file)."""
+    from tiledb_vector_search_spark.indexes import IVFFlatIndex
+    from tiledb_vector_search_spark.storage import HadoopFS
+
+    rng = np.random.default_rng(0)
+    src = small_df(
+        spark,
+        [(i, rng.standard_normal(4).tolist()) for i in range(64)],
+        "external_id long, vector array<float>",
     )
-    assert [r["partition_id"] for r in via_spark] == [1, 2, 3]
+    uri = str(tmp_path / "idx")
+    IVFFlatIndex.ingest(spark, uri, src, partitions=4, timestamp=1)
+
+    def no_jvm_listing(self, path):
+        raise AssertionError(f"JVM listing of local {path}")
+
+    monkeypatch.setattr(HadoopFS, "list_files", no_jvm_listing)
+    maps = [
+        IVFFlatIndex(spark, u)._partition_bytes()
+        for u in (uri, f"file:{uri}", f"file://{uri}")
+    ]
+    assert maps[0] == maps[1] == maps[2]
+    assert maps[0] and set(maps[0]) <= {0, 1, 2, 3} and all(maps[0].values())
 
 
 def test_updates_log_mixes_spark_and_pyarrow_batches(spark, tmp_path):

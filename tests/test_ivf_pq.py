@@ -233,11 +233,11 @@ def test_pruned_scan_reads_code_column_only(spark, source, pq_index):
 
 
 def test_encode_kernels_agree(spark):
-    """Standalone encode kernel and the fused assign+encode kernel must
-    produce identical codes for identical codebooks."""
+    """The fused assign+encode kernel picks, per subspace, the codebook
+    entry nearest ||sub - c||^2 — of the raw vector, and of its residual
+    to the assigned centroid with ``residual=True``."""
     import numpy as np
     from tiledb_vector_search_spark.indexes.ivf_pq import (
-        _encode_kernel,
         assign_and_encode_kernel,
         train_pq_codebooks,
     )
@@ -250,17 +250,20 @@ def test_encode_kernels_agree(spark):
     )
     cb = train_pq_codebooks(x.astype(np.float64), num_subspaces=4, n_codes=16)
     cents = x[:4].astype(np.float64)
-    a = {
-        r.external_id: bytes(r.code)
-        for r in _encode_kernel(df, cb, "vector").collect()
-    }
-    b = {
-        r.external_id: bytes(r.code)
-        for r in assign_and_encode_kernel(
-            df, cents, cb, "vector", "partition_id"
-        ).collect()
-    }
-    assert a == b
+    xf = x.astype(np.float64)
+    assign = np.argmin(((xf[:, None, :] - cents[None]) ** 2).sum(-1), axis=1)
+    for residual in (False, True):
+        enc = xf - cents[assign] if residual else xf
+        subs = enc.reshape(40, 4, 4)
+        d = ((subs[:, :, None, :] - cb[None]) ** 2).sum(-1)
+        want = {i: np.argmin(d[i], axis=1).astype(np.uint8).tobytes() for i in range(40)}
+        got = {
+            r.external_id: (r.partition_id, bytes(r.code))
+            for r in assign_and_encode_kernel(
+                df, cents, cb, "vector", "partition_id", residual=residual
+            ).collect()
+        }
+        assert got == {i: (int(assign[i]), want[i]) for i in range(40)}
 
 
 def test_join_strategy_matches_kernel(spark, source, pq_index):

@@ -193,3 +193,57 @@ def test_plan_hygiene(spark, sf_dir, name):
     assert "BatchEvalPython" not in plan, (
         f"{name}: row-at-a-time Python UDF — use Arrow (mapInPandas) instead"
     )
+
+
+def test_one_uri_parser_and_file_layer():
+    """``driver_io`` is the only module that turns a URI into a
+    filesystem: no other package module touches ``pyarrow.fs``, calls
+    ``FileSystem.from_uri``, tests a path for a ``file:`` prefix, or
+    imports a private helper of ``sql.tvf``."""
+    import ast
+    from pathlib import Path
+
+    import tiledb_vector_search_spark as pkg
+
+    def file_prefix(node):
+        vals = node.elts if isinstance(node, ast.Tuple) else [node]
+        return any(
+            isinstance(v, ast.Constant)
+            and isinstance(v.value, str)
+            and v.value.startswith("file:")
+            for v in vals
+        )
+
+    root = Path(pkg.__file__).parent
+    offences = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "driver_io.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            line = f"{rel}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.Import):
+                if any(a.name.startswith("pyarrow.fs") for a in node.names):
+                    offences.append(f"{line} imports pyarrow.fs")
+            elif isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                names = [a.name for a in node.names]
+                if mod.startswith("pyarrow.fs") or (
+                    mod == "pyarrow" and "fs" in names
+                ):
+                    offences.append(f"{line} imports pyarrow.fs")
+                if mod.endswith("sql.tvf") and any(
+                    n.startswith("_") for n in names
+                ):
+                    offences.append(f"{line} imports private sql.tvf names")
+            elif isinstance(node, ast.Attribute) and node.attr == "from_uri":
+                offences.append(f"{line} calls from_uri")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "startswith"
+                and node.args
+                and file_prefix(node.args[0])
+            ):
+                offences.append(f"{line} tests a file: prefix")
+    assert offences == []

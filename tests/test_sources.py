@@ -55,15 +55,19 @@ def test_roundtrip(spark, tmp_path, writer, ext, dtype):
     path = str(tmp_path / f"v.{ext}")
     writer(path, data)
 
-    size, dims, dt = read_source_metadata(spark, path)
-    assert (size, dims) == (137, 16)
+    # every local URI form reads the same file; a non-local one is refused
+    for uri in (path, f"file:{path}", f"file://localhost{path}"):
+        size, dims, dt = read_source_metadata(spark, uri)
+        assert (size, dims) == (137, 16)
 
-    df = read_vectors(spark, path, chunk_rows=50)  # force multiple chunks
-    rows = df.orderBy("external_id").collect()
-    assert len(rows) == 137
-    got = np.array([r.vector for r in rows], dtype=np.float32)
-    np.testing.assert_array_equal(got, data.astype(np.float32))
-    assert [r.external_id for r in rows] == list(range(137))
+        df = read_vectors(spark, uri, chunk_rows=50)  # force multiple chunks
+        rows = df.orderBy("external_id").collect()
+        assert len(rows) == 137
+        got = np.array([r.vector for r in rows], dtype=np.float32)
+        np.testing.assert_array_equal(got, data.astype(np.float32))
+        assert [r.external_id for r in rows] == list(range(137))
+    with pytest.raises(ValueError, match="hdfs://nn/v"):
+        read_source_metadata(spark, f"hdfs://nn/v.{ext}")
 
 
 def test_external_ids_u64bin(spark, tmp_path):

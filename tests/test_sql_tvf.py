@@ -636,18 +636,23 @@ def test_tvf_allowed_ids_flat_and_pq(spark, source, tmp_path, index_kind):
 
 
 def test_resolve_fs_dispatch(tmp_path):
-    """Bare paths -> local fs; file:// URIs -> from_uri resolution;
-    unknown schemes raise with the fsspec hint instead of a glob miss."""
+    """Every local form -> the local fs at the OS path; other schemes ->
+    from_uri resolution; unknown schemes raise with the fsspec hint
+    instead of a glob miss."""
     from pyarrow import fs as pafs
 
-    from tiledb_vector_search_spark.sql.tvf import _resolve_fs
+    from tiledb_vector_search_spark.driver_io import resolve_fs
 
-    fs, p = _resolve_fs(str(tmp_path))
-    assert isinstance(fs, pafs.LocalFileSystem) and p == str(tmp_path)
-    fs2, p2 = _resolve_fs(f"file://{tmp_path}")
-    assert isinstance(fs2, pafs.LocalFileSystem) and p2 == str(tmp_path)
+    for uri in (
+        str(tmp_path),
+        f"file:{tmp_path}",
+        f"file://{tmp_path}",
+        f"file://localhost{tmp_path}",
+    ):
+        fs, p = resolve_fs(uri)
+        assert isinstance(fs, pafs.LocalFileSystem) and p == str(tmp_path)
     with pytest.raises(Exception, match="fsspec|scheme|URI"):
-        _resolve_fs("definitely-not-a-scheme://bucket/idx")
+        resolve_fs("definitely-not-a-scheme://bucket/idx")
 
 
 def test_tvf_file_scheme_uri_matches_plain_path(spark, source, ivf_uri):
@@ -666,7 +671,9 @@ def test_tvf_file_scheme_uri_matches_plain_path(spark, source, ivf_uri):
             for r in _sql(spark, uri, "tvf_q_scheme").collect()
         )
 
-    assert run(f"file://{ivf_uri}") == run(ivf_uri)
+    want = run(ivf_uri)
+    for uri in (f"file://{ivf_uri}", f"file:{ivf_uri}", f"file://localhost{ivf_uri}"):
+        assert run(uri) == want
 
 
 def test_tvf_file_scheme_with_updates_and_pq(spark, source, pq_uri, tmp_path):

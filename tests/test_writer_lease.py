@@ -761,6 +761,18 @@ def test_rename_if_exists_missing_source_is_false(spark, tmp_path):
     assert fs.read_text(dst) == "x"
 
 
+def test_rename_overwrite_raises_on_io_error(spark, tmp_path):
+    """Only a filesystem without an overwrite-rename reads as False: a
+    rename that fails for another reason (here a missing source) raises,
+    and the live target keeps its bytes."""
+    fs = HadoopFS(spark, str(tmp_path))
+    dst = str(tmp_path / "_index_meta.json")
+    fs.write_text_atomic(dst, "live")
+    with pytest.raises(Exception, match="FileNotFound|does not exist"):
+        fs._rename_overwrite(fs._p(str(tmp_path / "gone")), fs._p(dst))
+    assert fs.read_text(dst) == "live"
+
+
 @pytest.mark.parametrize(
     "name, lost",
     [

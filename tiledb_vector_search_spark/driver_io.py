@@ -1,29 +1,38 @@
-"""Driver-side parquet I/O for SMALL index artifacts.
+"""The driver's one file layer: every URI -> filesystem decision.
 
-Centroid tables, PQ codebooks, medoids and single-call DML batches are
-driver-resident by construction (bounded numpy arrays / short python
-lists — they never scale with the corpus, only with k or the batch
-size).  Writing one through a Spark job costs a full job round-trip —
-scheduling, a task launch, a Python-worker hop, commit protocol —
-~100-500 ms of fixed overhead per artifact on local[32] and a driver→
-cluster round-trip on a real deployment.  The same table written with
-pyarrow on the driver costs ~1 ms and produces parquet that
-``spark.read.parquet`` reads identically (verified by
-tests/test_driver_io.py round-trips).
+This is the only module that turns a URI into an OS path or a pyarrow
+filesystem:
 
-The fast path applies ONLY to local filesystem URIs (``file:`` or
-schemeless).  Remote URIs (hdfs://, s3a://, ...) fall back to the
-Spark writer, so the storage abstraction holds everywhere; the local
-fast path is what the bench and every sandbox deployment exercise.
+- ``local_os_path`` is the one URI parser.  A bare path, ``file:/p``,
+  ``file:///p`` and ``file://localhost/p`` are local; any other scheme
+  (``hdfs://``, ``s3a://``, ...) is not.
+- ``resolve_fs`` maps a URI to a ``pyarrow.fs`` filesystem: every local
+  form to ``LocalFileSystem``, other schemes through
+  ``FileSystem.from_uri`` (fsspec for schemes pyarrow lacks).  The SQL
+  TVFs (``sql/tvf.py``, ``sql/bm25_tvf.py``) and the index change feed
+  (``streaming/index_changes.py``) run on executors, where there is no
+  SparkSession, so they read every scheme through it.
+- Driver-side reads and writes are pyarrow for local URIs and stay on
+  Spark/Hadoop for other URIs: small snapshot artifacts (centroids, PQ
+  codebooks, Vamana medoids) read through ``read_small_table``
+  (``spark.read.parquet(...).toArrow()`` when not local), single-call
+  DML batches write through ``write_small_parquet`` /
+  ``append_small_parquet`` (``DataFrame.write.parquet`` when not
+  local), and ``Index._partition_bytes`` lists with ``list_files``
+  (``HadoopFS.list_files`` when not local).  One parquet file costs
+  ~1 ms with pyarrow, where a Spark job costs ~100-500 ms of
+  scheduling, task launch and commit.  Index meta, leases and every
+  other ``IndexStorage`` operation stay on ``storage.HadoopFS``.
 
-This is an I/O mechanism change, not a semantic one: artifact bytes are
-recomputed on every call from the live inputs, file layout stays "a
-directory of parquet part files", and the meta-flip commit protocol
-around these writes is untouched.
+Spark reads the pyarrow-written parquet identically
+(tests/test_driver_io.py).  Only the I/O mechanism differs: the file
+layout stays "a directory of parquet part files", and the meta-flip
+commit protocol around these writes is unchanged.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -60,6 +69,84 @@ def local_os_path(path: str) -> str | None:
         # some other scheme (hdfs:, s3a:, ...)
         return None
     return path
+
+
+def resolve_fs(path: str):
+    """(pyarrow FileSystem, filesystem path) for ``path``.
+
+    Every local form ``local_os_path`` accepts maps to
+    ``LocalFileSystem``; other schemes (``s3://``, ``gs://``,
+    ``hdfs://``, ...) resolve through ``FileSystem.from_uri``, so an
+    object-store index is readable without a SparkSession.  Schemes
+    pyarrow does not know fall back to fsspec when it is installed
+    (``PyFileSystem(FSSpecHandler(...))``), else raise with that hint.
+    """
+    from pyarrow import fs as pafs
+
+    os_path = local_os_path(path)
+    if os_path is not None:
+        return pafs.LocalFileSystem(), os_path
+    try:
+        return pafs.FileSystem.from_uri(path)
+    except Exception as exc:
+        try:
+            import fsspec
+        except ImportError:
+            raise ValueError(
+                f"unsupported filesystem scheme in {path!r} ({exc}); "
+                "install fsspec to enable additional schemes"
+            ) from exc
+        fs, fpath = fsspec.core.url_to_fs(path)
+        return pafs.PyFileSystem(pafs.FSSpecHandler(fs)), fpath
+
+
+def list_files(path: str) -> list[tuple[str, int]]:
+    """(path, size) of every file under ``path``, recursively; empty
+    when ``path`` does not exist."""
+    from pyarrow import fs as pafs
+
+    fs, p = resolve_fs(path)
+    infos = fs.get_file_info(
+        pafs.FileSelector(p, allow_not_found=True, recursive=True)
+    )
+    return [(i.path, i.size) for i in infos if i.type == pafs.FileType.File]
+
+
+def list_parquet_files(path: str) -> tuple[object, list[str]]:
+    """(filesystem, sorted parquet file paths directly under ``path``);
+    empty list when the directory does not exist."""
+    from pyarrow import fs as pafs
+
+    fs, p = resolve_fs(path)
+    infos = fs.get_file_info(pafs.FileSelector(p, allow_not_found=True))
+    return fs, sorted(
+        i.path
+        for i in infos
+        if i.type == pafs.FileType.File and i.path.endswith(".parquet")
+    )
+
+
+def is_dir(path: str) -> bool:
+    from pyarrow import fs as pafs
+
+    fs, p = resolve_fs(path)
+    return fs.get_file_info(p).type == pafs.FileType.Directory
+
+
+def read_json_file(path: str) -> dict:
+    fs, p = resolve_fs(path)
+    with fs.open_input_stream(p) as fh:
+        return json.loads(fh.read().decode("utf-8"))
+
+
+def read_parquet_dir(path: str, columns: list[str] | None = None) -> pa.Table:
+    """Every parquet file directly under ``path`` as one table."""
+    fs, files = list_parquet_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    return pa.concat_tables(
+        [pq.read_table(f, columns=columns, filesystem=fs) for f in files]
+    )
 
 
 def _split_ddl(ddl: str) -> list[tuple[str, str]]:
@@ -145,33 +232,9 @@ def append_small_parquet(spark, path: str, rows: list, ddl: str) -> None:
     _write_table(rows_to_table(rows, ddl), os_dir)
 
 
-def read_small_rows(spark, path: str, order_by: tuple = ()) -> list[dict]:
-    """All rows of a SMALL artifact table as a list of dicts, ordered by
-    ``order_by``.  Local paths read via pyarrow on the driver (no Spark
-    job — these are bounded driver artifacts: centroids, codebooks,
-    medoids); remote URIs fall back to the Spark reader."""
-    t = read_small_parquet(path)
-    if t is not None:
-        pdf = t.to_pandas()
-        if order_by:
-            # stable sort: ties (none in practice — keys are unique)
-            # keep file order, matching Spark's sort for unique keys
-            pdf = pdf.sort_values(list(order_by), kind="mergesort")
-        return pdf.to_dict("records")
-    df = spark.read.parquet(path)
-    if order_by:
-        df = df.orderBy(*order_by)
-    return [r.asDict() for r in df.collect()]
-
-
-def read_small_parquet(path: str) -> pa.Table | None:
-    """Whole-directory pyarrow read for local paths, else None (caller
-    falls back to the Spark reader).  Returns an empty-schema table for
-    an existing-but-empty directory."""
-    os_dir = local_os_path(path)
-    if os_dir is None or not os.path.exists(os_dir):
-        return None
-    try:
-        return pq.read_table(os_dir)
-    except Exception:
-        return None
+def read_small_table(spark, path: str) -> pa.Table:
+    """A SMALL artifact table (centroids, codebooks, medoids): pyarrow
+    on the driver for local URIs, the Spark reader for other URIs."""
+    if local_os_path(path) is not None:
+        return read_parquet_dir(path)
+    return spark.read.parquet(path).toArrow()

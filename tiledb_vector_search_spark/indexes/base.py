@@ -17,7 +17,6 @@ branches of one DAG).
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 import numpy as np
@@ -25,6 +24,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiledb_vector_search_spark.driver_io import (
+    list_files,
+    local_os_path,
+    read_small_table,
+)
 from tiledb_vector_search_spark.functions.distance import (
     DistanceMetric,
     normalize_expr,
@@ -83,6 +87,14 @@ def check_query_kwargs(kw: dict, context: str) -> None:
             "ignored; tolerated cross-type/no-op kwargs: "
             f"{sorted(QUERY_KWARG_TOLERANCE)}"
         )
+
+
+def decode_centroids(table) -> np.ndarray:
+    """A centroids table (partition_id, centroid) as a float64 matrix,
+    one row per partition in ``partition_id`` order."""
+    order = np.argsort(table.column(PARTITION_COL).to_numpy(), kind="stable")
+    cents = np.array(table.column("centroid").to_pylist(), dtype=np.float64)
+    return cents[order]
 
 
 class Index:
@@ -256,25 +268,57 @@ class Index:
         # ~0.1 s of driver/py4j round-trips, and streaming re-opens the
         # handle every micro-batch.  The base layout under a snapshot is
         # immutable (nonce-keyed), so the resolved plan stays valid.
-        cached = getattr(self, "_base_df_cache", None)
-        if cached is not None:
-            return cached
-        nonce = self._snapshot_nonce()
-        spark_key = id(self.spark)
-        if nonce is None:  # legacy meta: per-handle memo only
-            self._base_df_cache = self.storage.read_base(self.base_ts)
-        else:
-            self._base_df_cache = cached_snapshot_artifact(
-                ("base_df", spark_key, self.uri, self.base_ts, nonce),
-                lambda: self.storage.read_base(self.base_ts),
-            )
-        return self._base_df_cache
+        return self._snapshot_memo(
+            "base_df",
+            lambda: self.storage.read_base(self.base_ts),
+            per_session=True,
+        )
+
+    def _snapshot_memo(self, name: str, load, per_session: bool = False):
+        """``load()`` once per handle and once per process per snapshot.
+
+        Every artifact under a snapshot is immutable, so it is cached
+        under ``(name[, id(spark)], uri, base_ts, snapshot_nonce)`` by
+        ``storage.cached_snapshot_artifact``: streaming loops re-open the
+        index every micro-batch and would otherwise pay the read each
+        time.
+        ``per_session`` keys DataFrames by their session.  Legacy meta
+        without a nonce memoizes per handle only."""
+        memo = self.__dict__.setdefault("_snapshot_memos", {})
+        if name not in memo:
+            nonce = self._snapshot_nonce()
+            if nonce is None:
+                memo[name] = load()
+            else:
+                key = (name, id(self.spark)) if per_session else (name,)
+                memo[name] = cached_snapshot_artifact(
+                    key + (self.uri, self.base_ts, nonce), load
+                )
+        return memo[name]
+
+    def _base_entry(self) -> dict:
+        for e in reversed(self.meta["ingestions"]):
+            if e["ts"] == self.base_ts:
+                return e
+        raise RuntimeError("no ingestion entry for base_ts")
 
     def _snapshot_nonce(self) -> "str | None":
-        for e in reversed(self.meta.get("ingestions", [])):
-            if e["ts"] == self.base_ts:
-                return e.get("snapshot_nonce")
-        return None
+        return self._base_entry().get("snapshot_nonce")
+
+    @property
+    def partitions(self) -> int:
+        return int(self._base_entry()["partitions"])
+
+    def centroids(self) -> np.ndarray:
+        """Routing centroids of the base snapshot, in partition order."""
+        return self._snapshot_memo(
+            "centroids",
+            lambda: decode_centroids(
+                read_small_table(
+                    self.spark, self.storage.centroids_path(self.base_ts)
+                )
+            ),
+        )
 
     def _partition_bytes(self) -> dict:
         """On-disk bytes per base partition, one FS walk per snapshot.
@@ -282,63 +326,34 @@ class Index:
         Used to right-size pruned kernel scans (``_kernel_scan_tasks``)
         and the finite-RAM partition groups without a per-query listing
         — the layout under ``base_path(base_ts)`` is immutable, so the
-        map is cached under the snapshot nonce like the centroids."""
-        from tiledb_vector_search_spark.schemas import PARTITION_COL
-
-        cached = getattr(self, "_part_bytes_cache", None)
-        if cached is not None:
-            return cached
+        map is memoized per snapshot.  Local layouts list with pyarrow:
+        the JVM ``RemoteIterator`` costs ~4 py4j round-trips PER FILE
+        (0.7 s on a 32-partition snapshot, paid on the first query of
+        every fresh index); other URIs keep the Hadoop listing."""
 
         def load():
             base = self.storage.base_path(self.base_ts)
+            if local_os_path(base) is not None:
+                files = list_files(base)
+            else:
+                files = self.storage.fs.list_files(base)
             prefix = f"{PARTITION_COL}="
             sizes: dict[int, int] = {}
-            # local layouts walk with os.scandir — the JVM RemoteIterator
-            # costs ~4 py4j round-trips PER FILE (measured 0.7 s on a
-            # 32-partition snapshot, paid on the first query of every
-            # fresh index); remote URIs keep the Hadoop walk
-            local = base if not base.startswith("file:") else base[5:]
-            if "://" not in base and os.path.isdir(local):
-                with os.scandir(local) as dirs:
-                    for d in dirs:
-                        if not d.name.startswith(prefix):
-                            continue
-                        try:
-                            pid = int(d.name[len(prefix):])
-                        except ValueError:
-                            continue
-                        total = 0
-                        for root, _dn, files in os.walk(d.path):
-                            for fname in files:
-                                if not fname.startswith((".", "_")):
-                                    total += os.path.getsize(
-                                        os.path.join(root, fname)
-                                    )
-                        sizes[pid] = total
-                return sizes
-            fs = self.storage.fs
-            if fs.exists(base):
-                it = fs._fs.listFiles(fs._p(base), True)
-                while it.hasNext():
-                    f = it.next()
-                    for seg in f.getPath().toString().split("/"):
-                        if seg.startswith(prefix):
-                            try:
-                                pid = int(seg[len(prefix):])
-                            except ValueError:
-                                break
-                            sizes[pid] = sizes.get(pid, 0) + int(f.getLen())
-                            break
+            for path, size in files:
+                segs = path.split("/")
+                if segs[-1].startswith((".", "_")):
+                    continue
+                seg = next((g for g in segs if g.startswith(prefix)), None)
+                if seg is None:
+                    continue
+                try:
+                    pid = int(seg[len(prefix):])
+                except ValueError:
+                    continue
+                sizes[pid] = sizes.get(pid, 0) + int(size)
             return sizes
 
-        nonce = self._snapshot_nonce()
-        if nonce is None:  # legacy meta: per-handle memo only
-            self._part_bytes_cache = load()
-        else:
-            self._part_bytes_cache = cached_snapshot_artifact(
-                ("part_bytes", self.uri, self.base_ts, nonce), load
-            )
-        return self._part_bytes_cache
+        return self._snapshot_memo("part_bytes", load)
 
     # per-task scoring budget for the kernel scan, in bytes·queries:
     # scoring CPU ∝ probed bytes × routed queries, and ~8e8 byte·query

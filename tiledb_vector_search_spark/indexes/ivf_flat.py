@@ -53,11 +53,7 @@ from tiledb_vector_search_spark.schemas import (
     VECTOR_COL,
     integral_id_col,
 )
-from tiledb_vector_search_spark.storage import (
-    IndexStorage,
-    cached_snapshot_artifact,
-    now_ms,
-)
+from tiledb_vector_search_spark.storage import IndexStorage, now_ms
 from tiledb_vector_search_spark.session import small_df
 from tiledb_vector_search_spark.driver_io import write_small_parquet
 
@@ -515,44 +511,6 @@ class IVFFlatIndex(Index):
 
     # -- access ---------------------------------------------------------------
 
-    def centroids(self) -> np.ndarray:
-        # memoized per open AND process-wide per snapshot_nonce:
-        # streaming loops re-open the index every micro-batch (snapshot
-        # discipline), and without the shared cache each re-open paid
-        # one Spark collect job for an immutable artifact
-        cached = getattr(self, "_centroids_cache", None)
-        if cached is not None:
-            return cached
-
-        def load():
-            from tiledb_vector_search_spark.driver_io import read_small_rows
-
-            rows = read_small_rows(
-                self.spark,
-                self.storage.centroids_path(self.base_ts),
-                order_by=(PARTITION_COL,),
-            )
-            return np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-        nonce = self._base_entry().get("snapshot_nonce")
-        if nonce is None:  # legacy meta: per-handle memo only
-            self._centroids_cache = load()
-        else:
-            self._centroids_cache = cached_snapshot_artifact(
-                ("centroids", self.uri, self.base_ts, nonce), load
-            )
-        return self._centroids_cache
-
-    @property
-    def partitions(self) -> int:
-        return int(self._base_entry()["partitions"])
-
-    def _base_entry(self) -> dict:
-        for e in reversed(self.meta["ingestions"]):
-            if e["ts"] == self.base_ts:
-                return e
-        raise RuntimeError("no ingestion entry for base_ts")
-
     def _recall_curve_settings(self) -> list:
         # power-of-two nprobe ladder up to full probe (the exact point)
         grid, p = [], 1
@@ -566,8 +524,6 @@ class IVFFlatIndex(Index):
         """The bridge set as pseudo-partition ``OVERLAY_PID``
         (partition_id, external_id, vector), or ``None`` when the index
         was built without an overlay."""
-        if hasattr(self, "_overlay_cache"):
-            return self._overlay_cache
 
         def load():
             path = self.storage.aux_path(OVERLAY_AUX, self.base_ts)
@@ -580,15 +536,7 @@ class IVFFlatIndex(Index):
         # overlay existence + layout are immutable per snapshot: resolve
         # the reader (exists + listing + schema) once per session, not
         # per re-open — streaming re-opens the handle every micro-batch
-        nonce = self._base_entry().get("snapshot_nonce")
-        if nonce is None:
-            self._overlay_cache = load()
-        else:
-            self._overlay_cache = cached_snapshot_artifact(
-                ("overlay_df", id(self.spark), self.uri, self.base_ts, nonce),
-                load,
-            )
-        return self._overlay_cache
+        return self._snapshot_memo("overlay_df", load, per_session=True)
 
     @property
     def has_overlay(self) -> bool:

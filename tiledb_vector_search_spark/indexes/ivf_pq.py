@@ -67,13 +67,12 @@ from tiledb_vector_search_spark.schemas import (
     VECTOR_COL,
     integral_id_col,
 )
-from tiledb_vector_search_spark.storage import (
-    IndexStorage,
-    cached_snapshot_artifact,
-    now_ms,
-)
+from tiledb_vector_search_spark.storage import IndexStorage, now_ms
 from tiledb_vector_search_spark.session import small_df
-from tiledb_vector_search_spark.driver_io import write_small_parquet
+from tiledb_vector_search_spark.driver_io import (
+    read_small_table,
+    write_small_parquet,
+)
 
 _SUPPORTED = {DistanceMetric.SUM_OF_SQUARES, DistanceMetric.L2}
 
@@ -88,43 +87,6 @@ PQ_TRAIN_MAX = 100_000
 OVERLAY_AUX = "pq_overlay"
 OVERLAY_PID = -1
 DEFAULT_OVERLAY_MAX = 8192
-
-
-def _encode_kernel(df: DataFrame, codebooks: np.ndarray, vector_col: str) -> DataFrame:
-    """Append a ``code`` binary column: nearest codebook entry per subspace.
-
-    Reference ``ivf_pq_index.h:559-595`` (flat_encode over subspaces).
-    ``codebooks``: (num_subspaces, n_codes, sub_dim) float64.
-    """
-    import pandas as pd
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(codebooks)
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    schema += f", {CODE_COL} binary"
-
-    def encode(batches):
-        cb = bc.value
-        m, n_codes, sub_dim = cb.shape
-        cb_sq = np.sum(cb * cb, axis=2)  # (m, n_codes)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(list(pdf[vector_col]), dtype=np.float64)
-            n = x.shape[0]
-            codes = np.empty((n, m), dtype=np.uint8)
-            for j in range(m):
-                sub = x[:, j * sub_dim : (j + 1) * sub_dim]
-                # ||sub - c||² argmin via the BLAS identity (x² terms constant)
-                d = cb_sq[j][None, :] - 2.0 * (sub @ cb[j].T)
-                codes[:, j] = np.argmin(d, axis=1)
-            out = pdf.copy()
-            out[CODE_COL] = [codes[i].tobytes() for i in range(n)]
-            yield out
-
-    return df.mapInPandas(encode, schema=schema)
 
 
 def assign_and_encode_kernel(
@@ -244,6 +206,17 @@ def adc_topk(
     the (distance, id) order.  The per-cell scan of every IVF_PQ query
     plan; residual indexes pass (q − centroid[pid]) as ``qmat``."""
     return topk_rows(adc_distances(adc_tables(qmat, codebooks), codes), ids, k)
+
+
+def decode_codebooks(table, m: int) -> np.ndarray:
+    """A codebooks table (subspace, code, centroid) as an
+    (m, n_codes, sub_dim) float64 array."""
+    subspace = table.column("subspace").to_numpy()
+    code = table.column("code").to_numpy()
+    cents = table.column("centroid").to_pylist()
+    cb = np.empty((m, int(code.max()) + 1, len(cents[0])), dtype=np.float64)
+    cb[subspace, code] = cents
+    return cb
 
 
 def default_num_subspaces(dims: int) -> int:
@@ -654,8 +627,6 @@ class IVFPQIndex(Index):
         """The bridge set (partition_id, external_id, vector) — raw
         vectors, pseudo-partition ``OVERLAY_PID`` — or ``None`` when the
         index was built without an overlay."""
-        if hasattr(self, "_overlay_cache"):
-            return self._overlay_cache
 
         def load():
             path = self.storage.aux_path(OVERLAY_AUX, self.base_ts)
@@ -667,15 +638,7 @@ class IVFPQIndex(Index):
 
         # immutable per snapshot: resolve the reader (exists + listing +
         # schema, ~0.1 s of driver round-trips) once per session
-        nonce = self._snapshot_nonce()
-        if nonce is None:
-            self._overlay_cache = load()
-        else:
-            self._overlay_cache = cached_snapshot_artifact(
-                ("overlay_df", id(self.spark), self.uri, self.base_ts, nonce),
-                load,
-            )
-        return self._overlay_cache
+        return self._snapshot_memo("overlay_df", load, per_session=True)
 
     @property
     def has_overlay(self) -> bool:
@@ -947,75 +910,18 @@ class IVFPQIndex(Index):
         False for raw-vector codes (pre-0.3 indexes — still readable)."""
         return bool(self.meta.get("pq_residual", False))
 
-    def centroids(self) -> np.ndarray:
-        # memoized per open AND process-wide per snapshot_nonce:
-        # streaming loops re-open the index every micro-batch (snapshot
-        # discipline), and without the shared cache each re-open paid
-        # one Spark collect job for an immutable artifact
-        cached = getattr(self, "_centroids_cache", None)
-        if cached is not None:
-            return cached
-
-        def load():
-            from tiledb_vector_search_spark.driver_io import read_small_rows
-
-            rows = read_small_rows(
-                self.spark,
-                self.storage.centroids_path(self.base_ts),
-                order_by=(PARTITION_COL,),
-            )
-            return np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-        nonce = self._base_entry().get("snapshot_nonce")
-        if nonce is None:  # legacy meta: per-handle memo only
-            self._centroids_cache = load()
-        else:
-            self._centroids_cache = cached_snapshot_artifact(
-                ("centroids", self.uri, self.base_ts, nonce), load
-            )
-        return self._centroids_cache
-
     def codebooks(self) -> np.ndarray:
-        """(num_subspaces, 256, sub_dim) from the aux table (memoized
-        per open and process-wide per snapshot — see centroids())."""
-        cached = getattr(self, "_codebooks_cache", None)
-        if cached is not None:
-            return cached
-
-        def load():
-            from tiledb_vector_search_spark.driver_io import read_small_rows
-
-            rows = read_small_rows(
-                self.spark,
-                self.storage.aux_path(PQ_CODEBOOK_AUX, self.base_ts),
-                order_by=("subspace", "code"),
-            )
-            m = self.num_subspaces
-            n_codes = len(rows) // m
-            sub_dim = len(rows[0]["centroid"])
-            out = np.empty((m, n_codes, sub_dim), dtype=np.float64)
-            for r in rows:
-                out[r["subspace"], r["code"]] = r["centroid"]
-            return out
-
-        nonce = self._base_entry().get("snapshot_nonce")
-        if nonce is None:
-            self._codebooks_cache = load()
-        else:
-            self._codebooks_cache = cached_snapshot_artifact(
-                ("pq_codebooks", self.uri, self.base_ts, nonce), load
-            )
-        return self._codebooks_cache
-
-    @property
-    def partitions(self) -> int:
-        return int(self._base_entry()["partitions"])
-
-    def _base_entry(self) -> dict:
-        for e in reversed(self.meta["ingestions"]):
-            if e["ts"] == self.base_ts:
-                return e
-        raise RuntimeError("no ingestion entry for base_ts")
+        """(num_subspaces, n_codes, sub_dim) from the aux table."""
+        return self._snapshot_memo(
+            "pq_codebooks",
+            lambda: decode_codebooks(
+                read_small_table(
+                    self.spark,
+                    self.storage.aux_path(PQ_CODEBOOK_AUX, self.base_ts),
+                ),
+                self.num_subspaces,
+            ),
+        )
 
     def _recall_curve_settings(self) -> list:
         # nprobe ladder x re-rank depth: k_factor=1 is the pure-ADC

@@ -65,13 +65,12 @@ from tiledb_vector_search_spark.schemas import (
     VECTOR_COL,
     integral_id_col,
 )
-from tiledb_vector_search_spark.storage import (
-    IndexStorage,
-    cached_snapshot_artifact,
-    now_ms,
-)
+from tiledb_vector_search_spark.storage import IndexStorage, now_ms
 from tiledb_vector_search_spark.session import small_df
-from tiledb_vector_search_spark.driver_io import write_small_parquet
+from tiledb_vector_search_spark.driver_io import (
+    read_small_table,
+    write_small_parquet,
+)
 
 _SUPPORTED = {
     DistanceMetric.SUM_OF_SQUARES,
@@ -96,6 +95,18 @@ from tiledb_vector_search_spark.indexes.overlay import (  # noqa: E402
     select_overlay_ids,
     waterfill_quotas as _waterfill_quotas,
 )
+
+
+def decode_medoids(table) -> dict[int, int]:
+    """A medoids table (partition_id, medoid_id) as
+    ``{partition_id: medoid_id}``."""
+    return {
+        int(p): int(m)
+        for p, m in zip(
+            table.column(PARTITION_COL).to_pylist(),
+            table.column("medoid_id").to_pylist(),
+        )
+    }
 
 
 def _walk_shard(
@@ -670,67 +681,15 @@ class VamanaIndex(Index):
 
     # -- access ---------------------------------------------------------------
 
-    def centroids(self) -> np.ndarray:
-        # memoized per open AND process-wide per snapshot_nonce:
-        # streaming loops re-open the index every micro-batch (snapshot
-        # discipline), and without the shared cache each re-open paid
-        # one Spark collect job for an immutable artifact
-        cached = getattr(self, "_centroids_cache", None)
-        if cached is not None:
-            return cached
-
-        def load():
-            from tiledb_vector_search_spark.driver_io import read_small_rows
-
-            rows = read_small_rows(
-                self.spark,
-                self.storage.centroids_path(self.base_ts),
-                order_by=(PARTITION_COL,),
-            )
-            return np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-        nonce = self._base_entry().get("snapshot_nonce")
-        if nonce is None:  # legacy meta: per-handle memo only
-            self._centroids_cache = load()
-        else:
-            self._centroids_cache = cached_snapshot_artifact(
-                ("centroids", self.uri, self.base_ts, nonce), load
-            )
-        return self._centroids_cache
-
     def medoids(self) -> dict[int, int]:
-        cached = getattr(self, "_medoids_cache", None)
-        if cached is not None:
-            return cached
-
-        def load():
-            from tiledb_vector_search_spark.driver_io import read_small_rows
-
-            rows = read_small_rows(
-                self.spark, self.storage.aux_path(MEDOID_AUX, self.base_ts)
-            )
-            return {
-                int(r[PARTITION_COL]): int(r["medoid_id"]) for r in rows
-            }
-
-        nonce = self._base_entry().get("snapshot_nonce")
-        if nonce is None:
-            self._medoids_cache = load()
-        else:
-            self._medoids_cache = cached_snapshot_artifact(
-                ("medoids", self.uri, self.base_ts, nonce), load
-            )
-        return self._medoids_cache
-
-    @property
-    def partitions(self) -> int:
-        return int(self._base_entry()["partitions"])
-
-    def _base_entry(self) -> dict:
-        for e in reversed(self.meta["ingestions"]):
-            if e["ts"] == self.base_ts:
-                return e
-        raise RuntimeError("no ingestion entry for base_ts")
+        return self._snapshot_memo(
+            "medoids",
+            lambda: decode_medoids(
+                read_small_table(
+                    self.spark, self.storage.aux_path(MEDOID_AUX, self.base_ts)
+                )
+            ),
+        )
 
     def _recall_curve_settings(self) -> list:
         # shard-probe ladder at the default beam (the probe count is
@@ -750,8 +709,6 @@ class VamanaIndex(Index):
         """The cross-shard bridge graph as pseudo-shard ``OVERLAY_PID``
         (partition_id, external_id, vector, neighbors), or ``None`` when
         the index was built without an overlay."""
-        if hasattr(self, "_overlay_cache"):
-            return self._overlay_cache
 
         def load():
             path = self.storage.aux_path(OVERLAY_AUX, self.base_ts)
@@ -763,15 +720,7 @@ class VamanaIndex(Index):
 
         # immutable per snapshot: resolve the reader (exists + listing +
         # schema, ~0.1 s of driver round-trips) once per session
-        nonce = self._snapshot_nonce()
-        if nonce is None:
-            self._overlay_cache = load()
-        else:
-            self._overlay_cache = cached_snapshot_artifact(
-                ("overlay_df", id(self.spark), self.uri, self.base_ts, nonce),
-                load,
-            )
-        return self._overlay_cache
+        return self._snapshot_memo("overlay_df", load, per_session=True)
 
     @property
     def has_overlay(self) -> bool:

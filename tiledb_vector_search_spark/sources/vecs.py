@@ -37,6 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiledb_vector_search_spark.driver_io import local_os_path
 from tiledb_vector_search_spark.schemas import (
     ID_COL,
     VECTOR_COL,
@@ -66,7 +67,13 @@ DEFAULT_CHUNK_ROWS = 100_000
 
 
 def _local_path(uri: str) -> str:
-    return uri[7:] if uri.startswith("file://") else uri
+    path = local_os_path(uri)
+    if path is None:
+        raise ValueError(
+            "vector files are read and written on the local filesystem; "
+            f"{uri!r} is not a local path"
+        )
+    return path
 
 
 def autodetect_source_type(source_uri: str) -> str:

@@ -13,8 +13,8 @@ tasks; each task tokenizes its query slice in Python, reads ONLY the
 postings/term-stats rows matching those terms (parquet ``term IN``
 filters → row-group pruning against the term-hash-partitioned artifact
 files), and scores with the engine's exact quantization contract.
-Index paths are scheme-agnostic via the shared ``_resolve_fs``
-(``file://``/``s3://``/...).
+Index paths are scheme-agnostic via the shared
+``driver_io.resolve_fs`` (every ``file:`` form, ``s3://``, ...).
 
 Exactness contract (pinned by parity tests against
 ``BM25Index.query``):
@@ -46,9 +46,9 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
-from tiledb_vector_search_spark.sql.tvf import (
-    _list_parquet_files,
-    _read_json_file,
+from tiledb_vector_search_spark.driver_io import (
+    list_parquet_files,
+    read_json_file,
 )
 
 BM25_SEARCH_SCHEMA = "query_id long, doc_id long, score double, rank long"
@@ -93,7 +93,7 @@ def _read_filtered(paths: list[str], columns: list[str], terms: list[str]):
 
     tables = []
     for path in paths:
-        fs, files = _list_parquet_files(path)
+        fs, files = list_parquet_files(path)
         tables.extend(
             pq.read_table(
                 f,
@@ -129,7 +129,7 @@ def _read_tombstones(uri: str, meta: dict) -> set[int]:
     out: set[int] = set()
     for b in meta.get("delete_batches", []):
         path = posixpath.join(uri, "tombstones", f"batch={b}")
-        fs, files = _list_parquet_files(path)
+        fs, files = list_parquet_files(path)
         for f in files:
             out.update(
                 pq.read_table(f, columns=["doc_id"], filesystem=fs)
@@ -149,7 +149,7 @@ def search_bm25_files(
 ) -> list[tuple[int, int, float, int]]:
     """Batched artifact search for one task's query slice; returns
     (query_id, doc_id, score, rank) rows."""
-    meta = _read_json_file(posixpath.join(uri, "_bm25_meta.json"))
+    meta = read_json_file(posixpath.join(uri, "_bm25_meta.json"))
     # the TVF's output schema is FIXED at `doc_id long` (SQL table
     # functions declare their schema up front); a string-keyed index
     # queries via the DataFrame API (BM25Index.query supports string

@@ -56,23 +56,41 @@ semi-join, with the same index-type policy (FLAT/IVF_FLAT/IVF_PQ;
 VAMANA keeps over-fetch).  Per-task cost is one ids-parquet read — use
 the DataFrame path when the allowed set itself is corpus-sized.
 
-Index paths are SCHEME-AGNOSTIC: bare paths read the local filesystem;
-``file://``, ``s3://``, ``gs://``, ``hdfs://`` (any pyarrow-registered
-scheme) resolve via ``pyarrow.fs.FileSystem.from_uri``, with an fsspec
-fallback for schemes pyarrow lacks — so an object-store index (the
-reference's normal deployment) is reachable from pure SQL.
+Index paths are SCHEME-AGNOSTIC: every read goes through
+``driver_io.resolve_fs``, so a bare path and every ``file:`` form read
+the local filesystem, and ``s3://``, ``gs://``, ``hdfs://`` (any
+pyarrow-registered scheme, fsspec for the rest) read the object store —
+so an object-store index (the reference's normal deployment) is
+reachable from pure SQL.
 """
 
 from __future__ import annotations
 
-import json
 import math
 import posixpath
 
 import numpy as np
 
+from tiledb_vector_search_spark.driver_io import (
+    is_dir,
+    list_parquet_files,
+    read_json_file,
+    read_parquet_dir,
+)
 from tiledb_vector_search_spark.functions.distance import DistanceMetric
 from tiledb_vector_search_spark.functions.dtypes import decode_matrix
+from tiledb_vector_search_spark.indexes.base import decode_centroids
+from tiledb_vector_search_spark.indexes.ivf_pq import (
+    PQ_CODEBOOK_AUX,
+    adc_topk,
+    decode_codebooks,
+)
+from tiledb_vector_search_spark.indexes.vamana import (
+    MEDOID_AUX,
+    OVERLAY_PID,
+    _walk_shard,
+    decode_medoids,
+)
 from tiledb_vector_search_spark.operators.knn import (
     block_topk,
     paired_sum_of_squares,
@@ -96,79 +114,6 @@ _FLAT_ONLY_METRICS = {"inner_product"}
 _NO_IDS = np.empty(0, dtype=np.int64)
 
 
-def _resolve_fs(path: str):
-    """(pyarrow FileSystem, fs-local path) for a possibly scheme-qualified
-    index path.
-
-    Scheme-agnostic by construction: a bare path is the local
-    filesystem; ``file://``, ``s3://``, ``gs://``, ``hdfs://`` (and any
-    other scheme pyarrow registers) resolve via
-    ``pyarrow.fs.FileSystem.from_uri`` — the reference serves indexes
-    from object storage as the default deployment (VFS URIs throughout,
-    e.g. ``object_index.py``), so the SQL surface must too.  Schemes
-    pyarrow doesn't know fall back to fsspec when installed
-    (``PyFileSystem(FSSpecHandler(...))``), else raise with that hint.
-    """
-    from pyarrow import fs as pafs
-
-    if "://" not in path:
-        return pafs.LocalFileSystem(), path
-    try:
-        return pafs.FileSystem.from_uri(path)
-    except Exception as exc:
-        try:
-            import fsspec
-            from pyarrow.fs import FSSpecHandler, PyFileSystem
-        except ImportError:
-            raise ValueError(
-                f"unsupported filesystem scheme in {path!r} ({exc}); "
-                "install fsspec to enable additional schemes"
-            ) from exc
-        fs, fpath = fsspec.core.url_to_fs(path)
-        return PyFileSystem(FSSpecHandler(fs)), fpath
-
-
-def _list_parquet_files(path: str) -> tuple[object, list[str]]:
-    """(filesystem, sorted fs-local parquet paths under ``path``);
-    empty list when the directory does not exist."""
-    from pyarrow import fs as pafs
-
-    fs, p = _resolve_fs(path)
-    infos = fs.get_file_info(pafs.FileSelector(p, allow_not_found=True))
-    return fs, sorted(
-        i.path
-        for i in infos
-        if i.type == pafs.FileType.File and i.path.endswith(".parquet")
-    )
-
-
-def _is_dir(path: str) -> bool:
-    from pyarrow import fs as pafs
-
-    fs, p = _resolve_fs(path)
-    return fs.get_file_info(p).type == pafs.FileType.Directory
-
-
-def _read_json_file(path: str) -> dict:
-    fs, p = _resolve_fs(path)
-    with fs.open_input_stream(p) as fh:
-        return json.loads(fh.read().decode("utf-8"))
-
-
-def _read_parquet_dir(path: str, columns: list[str] | None = None):
-    import pyarrow.parquet as pq
-
-    fs, files = _list_parquet_files(path)
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    import pyarrow as pa
-
-    tables = [
-        pq.read_table(f, columns=columns, filesystem=fs) for f in files
-    ]
-    return pa.concat_tables(tables)
-
-
 _TVF_INDEX_TYPES = ("FLAT", "IVF_FLAT", "IVF_PQ", "VAMANA")
 
 
@@ -183,7 +128,7 @@ def _open_index_meta(
     INSIDE the requested window (base_ts, timestamp] — the search paths
     then merge the updates overlay (``_load_updates``).
     """
-    meta = _read_json_file(posixpath.join(uri, "_index_meta.json"))
+    meta = read_json_file(posixpath.join(uri, "_index_meta.json"))
     if meta.get("index_type") not in _TVF_INDEX_TYPES:
         raise ValueError(
             f"ann_search TVF supports {'/'.join(_TVF_INDEX_TYPES)} indexes; "
@@ -216,9 +161,9 @@ def _open_index_meta(
 
 
 def _load_centroids(uri: str, ts: int) -> np.ndarray:
-    cent_tb = _read_parquet_dir(posixpath.join(uri, "centroids", f"ts={ts}"))
-    order = np.argsort(cent_tb.column("partition_id").to_numpy())
-    return np.array(cent_tb.column("centroid").to_pylist(), dtype=np.float64)[order]
+    return decode_centroids(
+        read_parquet_dir(posixpath.join(uri, "centroids", f"ts={ts}"))
+    )
 
 
 def _load_updates(
@@ -241,7 +186,7 @@ def _load_updates(
     filter ``IndexStorage.read_updates_raw`` applies).
     """
     empty = _NO_IDS
-    ufs, files = _list_parquet_files(posixpath.join(uri, "updates"))
+    ufs, files = list_parquet_files(posixpath.join(uri, "updates"))
     if not files:
         return empty, empty, None
     import pyarrow as pa
@@ -315,7 +260,7 @@ def _keep_mask(
 
 def _load_allowed(path: str) -> np.ndarray:
     """external_id column of an ids parquet (file or directory)."""
-    tb = _read_parquet_dir(path, columns=["external_id"])
+    tb = read_parquet_dir(path, columns=["external_id"])
     return tb.column("external_id").to_numpy().astype(np.int64)
 
 
@@ -327,7 +272,7 @@ def _read_vectors(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(external ids, float64 vectors) of one snapshot directory, with
     tombstoned and not-allowed rows dropped."""
-    tb = _read_parquet_dir(path, columns=["external_id", "vector"])
+    tb = read_parquet_dir(path, columns=["external_id", "vector"])
     ids = tb.column("external_id").to_numpy()
     x = decode_matrix(tb.column("vector").to_pylist(), vector_dtype)
     keep = _keep_mask(ids, tomb, allowed)
@@ -361,7 +306,7 @@ def _probes(
     base = posixpath.join(uri, "base", f"ts={ts}")
     for pid, qpos in sorted(queries_by_partition(pairs).items()):
         pdir = posixpath.join(base, f"partition_id={pid}")
-        if _is_dir(pdir):  # an empty partition writes no directory
+        if is_dir(pdir):  # an empty partition writes no directory
             yield pid, pdir, np.asarray(qpos, dtype=np.int64)
 
 
@@ -395,7 +340,7 @@ def _overlay_parts(
     twice; the merge's min() per (query, id) keeps the tighter estimate,
     exactly the DataFrame path's groupBy(query, id).agg(min(distance))."""
     ov_dir = posixpath.join(uri, "aux", aux, f"ts={ts}")
-    if not _is_dir(ov_dir):
+    if not is_dir(ov_dir):
         return []
     ids, x = _by_id(*_read_vectors(ov_dir, vector_dtype, tomb, allowed))
     return _scan_block(qmat, ids, x, k, metric)
@@ -615,19 +560,6 @@ def _ivf_flat_parts(
     )
 
 
-def _load_codebooks(uri: str, ts: int, m: int) -> np.ndarray:
-    """The PQ codebooks aux table as an (m, n_codes, sub_dim) array."""
-    cb_tb = _read_parquet_dir(
-        posixpath.join(uri, "aux", "pq_codebooks", f"ts={ts}")
-    )
-    subspace = cb_tb.column("subspace").to_numpy()
-    code = cb_tb.column("code").to_numpy()
-    cents = cb_tb.column("centroid").to_pylist()
-    cb = np.empty((m, int(code.max()) + 1, len(cents[0])), dtype=np.float64)
-    cb[subspace, code] = cents
-    return cb
-
-
 def _ivf_pq_parts(
     uri, meta, ts, vector_dtype, qmat, k, nprobe, k_factor, tomb, allowed
 ):
@@ -641,16 +573,17 @@ def _ivf_pq_parts(
     bytes per row — and the re-rank pass re-reads ONLY the candidate
     rows' partitions' (external_id, vector).
     """
-    from tiledb_vector_search_spark.indexes.ivf_pq import adc_topk
-
     m = int(meta["num_subspaces"])
     centroids = _load_centroids(uri, ts)
-    cb = _load_codebooks(uri, ts, m)
+    cb = decode_codebooks(
+        read_parquet_dir(posixpath.join(uri, "aux", PQ_CODEBOOK_AUX, f"ts={ts}")),
+        m,
+    )
     residual = bool(meta.get("pq_residual", False))
     coarse_k = max(k, int(math.ceil(k * k_factor)))
     coarse, coarse_pid = [], []
     for pid, pdir, qpos in _probes(uri, ts, qmat, centroids, nprobe):
-        tb = _read_parquet_dir(pdir, columns=["external_id", "code"])
+        tb = read_parquet_dir(pdir, columns=["external_id", "code"])
         ids = tb.column("external_id").to_numpy()
         codes = np.frombuffer(
             b"".join(tb.column("code").to_pylist()), dtype=np.uint8
@@ -708,30 +641,19 @@ def _vamana_parts(uri, ts, vector_dtype, qmat, k, nprobe, tomb, l_search):
     cut connectivity), each shard over-walks by its tombstone overlap,
     and tombstones are dropped from the walk RESULTS.
     """
-    from tiledb_vector_search_spark.indexes.vamana import (
-        OVERLAY_PID,
-        _walk_shard,
-    )
-
-    med_tb = _read_parquet_dir(
-        posixpath.join(uri, "aux", "vamana_medoids", f"ts={ts}")
-    )
-    medoids = dict(
-        zip(
-            med_tb.column("partition_id").to_pylist(),
-            med_tb.column("medoid_id").to_pylist(),
-        )
+    medoids = decode_medoids(
+        read_parquet_dir(posixpath.join(uri, "aux", MEDOID_AUX, f"ts={ts}"))
     )
     if l_search is None:
         l_search = max(2 * k, 50)  # VamanaIndex.query default
     shards = list(_probes(uri, ts, qmat, _load_centroids(uri, ts), nprobe))
     overlay_dir = posixpath.join(uri, "aux", "vamana_overlay", f"ts={ts}")
-    if _is_dir(overlay_dir):
+    if is_dir(overlay_dir):
         # the bridge set is probed by EVERY query
         shards.append((OVERLAY_PID, overlay_dir, np.arange(len(qmat))))
     parts = []
     for pid, pdir, qpos in shards:
-        tb = _read_parquet_dir(
+        tb = read_parquet_dir(
             pdir, columns=["external_id", "vector", "neighbors"]
         )
         ids, x, neighbors = _by_id(

@@ -672,11 +672,14 @@ class HadoopFS:
     def _rename_overwrite(self, src, dst) -> bool:
         """Atomic overwrite-rename via FileContext (HDFS / local): the
         destination is replaced in ONE namespace operation — no window
-        where it does not exist.  Returns False when the FS (or the
-        rename itself, e.g. onto a non-empty directory) doesn't support
-        it, so callers can fall back to delete-then-rename."""
+        where it does not exist.  Returns False only when the filesystem
+        has no overwrite-rename (``UnsupportedOperationException`` /
+        ``UnsupportedFileSystemException``), so callers can fall back to
+        delete-then-rename; any other error raises — a failed rename
+        must not send the caller into a fallback that deletes the live
+        target first."""
+        jvm = self._jvm
         try:
-            jvm = self._jvm
             fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
                 self._fs.getUri(), self._conf
             )
@@ -686,8 +689,12 @@ class HadoopFS:
             opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
             fc.rename(src, dst, opts)
             return True
-        except Exception:
-            return False
+        except Exception as exc:
+            if _java_exc_is(exc, "UnsupportedOperationException") or (
+                _java_exc_is(exc, "UnsupportedFileSystemException")
+            ):
+                return False
+            raise
 
     def _p(self, path: str):
         return self._Path(path)
@@ -892,18 +899,17 @@ class HadoopFS:
             s.getPath().getName() for s in self._fs.listStatus(self._p(path))
         ]
 
-    def count_files(self, path: str, suffix: str | None = None) -> int:
-        """Number of plain files under ``path`` (recursive)."""
+    def list_files(self, path: str) -> list[tuple[str, int]]:
+        """(path, length) of every plain file under ``path``
+        (recursive); empty when ``path`` does not exist."""
         if not self.exists(path):
-            return 0
+            return []
         it = self._fs.listFiles(self._p(path), True)
-        n = 0
+        out = []
         while it.hasNext():
             f = it.next()
-            name = f.getPath().getName()
-            if suffix is None or name.endswith(suffix):
-                n += 1
-        return n
+            out.append((f.getPath().toString(), int(f.getLen())))
+        return out
 
 
 class IndexStorage:

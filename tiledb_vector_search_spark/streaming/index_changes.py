@@ -44,9 +44,9 @@ SCHEMA = "external_id long, vector array<float>, is_delete boolean, ts long"
 
 
 def _meta(uri: str) -> dict:
-    from tiledb_vector_search_spark.sql.tvf import _read_json_file
+    from tiledb_vector_search_spark.driver_io import read_json_file
 
-    return _read_json_file(posixpath.join(uri, "_index_meta.json"))
+    return read_json_file(posixpath.join(uri, "_index_meta.json"))
 
 
 def _committed(uri: str) -> list[int]:
@@ -58,14 +58,14 @@ def _batch_rows(
 ) -> Iterator[Tuple]:
     """Raw log rows with ts in (lo, hi] — CDC emits the log as-is (no
     latest-per-id fold: a consumer folding state needs every event)."""
-    from tiledb_vector_search_spark.sql.tvf import _list_parquet_files
-
     import pyarrow.parquet as pq
+
+    from tiledb_vector_search_spark.driver_io import list_parquet_files
 
     want = [t for t in committed if lo_exclusive < t <= hi_inclusive]
     if not want:
         return
-    ufs, files = _list_parquet_files(posixpath.join(uri, "updates"))
+    ufs, files = list_parquet_files(posixpath.join(uri, "updates"))
     filters = [("ts", ">", lo_exclusive), ("ts", "<=", hi_inclusive)]
     wset = set(want)
     for f in files:
